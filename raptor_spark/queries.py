@@ -1421,21 +1421,84 @@ FROM documents GROUP BY md5(text)
 """
 
 
-def _shingles(col, n=3):
-    """Word n-gram shingles as an array column (whitespace tokenized).
+def _shingles(toks, n=3):
+    """Word n-gram shingles of a token-array column, as an array column.
 
-    A document with fewer than n tokens yields the EMPTY array — no
-    signature, never a candidate — matching the oracle CTEs' empty
-    range. (The guard must be a when(): sequence(0, size-n) with
-    size < n would generate a DESCENDING sequence, and the previous
-    greatest(size-n, 0) emitted a short under-n shingle that the SQL
-    side turned into NULL — divergent short-doc semantics.)"""
-    toks = F.split(F.trim(col), r"\s+")
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")
+    The k-th shingle joins tokens k..k+n-1 with one space — the oracle
+    CTEs' own ``t[i] || ' ' || t[i+1] || ' ' || t[i+2]`` — built from n
+    SHIFTED SLICES of the token array zipped element-wise, so the work
+    is linear in the token count. A transform over index positions
+    would have to reference the token array inside its lambda body,
+    which a higher-order function re-evaluates per element. Pass the
+    tokens as a column staged in its own projection (see
+    _shingle_source), so the split itself also runs once.
+
+    A document with fewer than n tokens yields the EMPTY array: every
+    slice has length max(size - n + 1, 0), matching the oracle's empty
+    range(1, len(t) - 1) — no short under-n shingle, which the SQL side
+    would turn into NULL."""
+    k = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    out = F.slice(toks, 1, k)
+    for i in range(1, n):
+        out = F.zip_with(
+            out, F.slice(toks, i + 1, k), lambda a, b: F.concat(a, F.lit(" "), b)
+        )
+    return out
+
+
+def _shingle_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shs, hs): one row per document with its DISTINCT
+    word-3-gram shingles and their 60-bit hashes (hs[i] is the value of
+    the first 15 hex digits of md5(shs[i])) — the single per-document source of every
+    shingle-based signature: minhash bands, simhash fingerprints, set
+    sizes and the exploded Jaccard index all derive from it, row-local,
+    without an explode -> groupBy(doc_id) regroup.
+
+    Documents with fewer than 3 tokens (empty, whitespace-only or NULL
+    text included) have no shingle and are dropped here, so they get no
+    signature and are never a candidate. Without the filter, array_min
+    over an empty lane would make a NULL band key shared by all of them
+    and an empty simhash vote a zero fingerprint pairing them all.
+
+    Catalyst pushes predicates below projections by substituting the
+    projected expressions, so a predicate on shs or hs would re-run the
+    shingle kernel inside the filter. Hence the filter tests the token
+    count (the same condition as size(shs) > 0), costing one extra
+    split; and NULL text is read as empty text, which keeps shs, hs and
+    their sizes non-nullable, so joins downstream infer no isnotnull
+    filter on them."""
+    docs = _rebalance(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    text = F.coalesce(F.col("text"), F.lit(""))
+    toks = docs.select(
+        "doc_id", F.split(F.trim(text), r"\s+").alias("t")
+    ).filter(F.size("t") >= 3)
+    shs = toks.select(
+        "doc_id", F.array_distinct(_shingles(F.col("t"))).alias("shs")
+    )
+    return shs.select(
+        "doc_id",
+        "shs",
+        F.expr(
+            "transform(shs, s -> "
+            "CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT))"
+        ).alias("hs"),
+    )
+
+
+def _shingle_index(src: DataFrame) -> DataFrame:
+    """_shingle_source -> (doc_id, sz, sh): one row per distinct shingle
+    of each document, carrying the document's set size sz, the
+    inverted-index form the Jaccard joins need.
+
+    explode_OUTER on purpose: every source row has at least one shingle,
+    so it emits the same rows as explode, but Catalyst infers no
+    size(shs) > 0 filter from an outer generator — a plain explode of
+    the shs attribute gets one, pushed below the projections, where it
+    re-runs the whole shingle kernel a second time per document."""
+    return src.select(
+        "doc_id",
+        F.size("shs").alias("sz"),
+        F.explode_outer("shs").alias("sh"),
     )
 
 
@@ -1454,11 +1517,10 @@ _LSH_BUCKET_CAP = 50
 #: universal-hash minhash lanes: each shingle is hashed ONCE (md5 -> 60-bit
 #: prefix, reduced mod the Mersenne prime 2^31-1) and the b*r independent
 #: minhash functions are h_i(x) = (a_i*x + b_i) mod p — 16 integer ops per
-#: shingle instead of 16 md5 calls, and the per-doc signature through the
-#: groupBy is 16 longs (128 B) instead of 16 md5 hex strings (512 B). The
-#: 31-bit modulus keeps a_i*x inside a signed 64-bit lane on both engines
-#: (DuckDB raises on BIGINT overflow); the two lanes of a band pack into
-#: one 62-bit long, so the bucket join key is (int, long).
+#: shingle instead of 16 md5 calls. The 31-bit modulus keeps a_i*x inside
+#: a signed 64-bit lane on both engines (DuckDB raises on BIGINT
+#: overflow); the two lanes of a band pack into one 62-bit long, so the
+#: bucket join key is (int, long).
 _MH_P = 2147483647
 _MH_AB = [
     (2054730081, 1668083862), (1381560984, 71539990),
@@ -1472,20 +1534,51 @@ _MH_AB = [
 ]
 
 
-def _minhash_buckets(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh) -> (band, mh, ds): pair-eligible LSH buckets with the
+def _minhash_lane_sql(i: int) -> str:
+    """Minhash lane i of a document: the min of h_i over its shingle
+    hashes, row-local over the hs array (no explode, no groupBy)."""
+    a, b = _MH_AB[i]
+    return "array_min(transform(hs, h -> (%d * (h %% %d) + %d) %% %d))" % (
+        a, _MH_P, b, _MH_P
+    )
+
+
+#: the 8 (band, mh) signature rows of a document as ONE SQL expression
+#: over hs: the 16 lanes, two per band packed into one 62-bit long
+_MH_BANDS_SQL = "array(%s)" % ", ".join(
+    "named_struct('band', %d, 'mh', shiftleft(%s, 31) + %s)"
+    % (
+        b,
+        _minhash_lane_sql(b * _LSH_ROWS),
+        _minhash_lane_sql(b * _LSH_ROWS + 1),
+    )
+    for b in range(_LSH_BANDS)
+)
+
+
+def _minhash_bands_uncapped(src: DataFrame) -> DataFrame:
+    """(doc_id, hs) -> (doc_id, band, mh): the band signatures BEFORE
+    the bucket cap, computed per document from _shingle_source's hash
+    array — split out so the cap diagnostics (tools/capstress.py) can
+    histogram raw bucket sizes with exactly the production signature
+    pipeline."""
+    return src.select(
+        "doc_id", F.explode(F.expr(_MH_BANDS_SQL)).alias("bm")
+    ).select("doc_id", "bm.band", "bm.mh")
+
+
+def _minhash_buckets(src: DataFrame) -> DataFrame:
+    """(doc_id, hs) -> (band, mh, ds): pair-eligible LSH buckets with the
     size cap applied — ds is the SORTED doc_id list of each bucket.
 
-    One groupBy(band, mh) both applies the cap (size(ds) between 2 and
-    the cap — singleton buckets can produce no pair, and buckets above
-    the cap are dropped exactly as before) and stages the bucket for
-    _bucket_pairs. This replaces the previous window-count + self-join
-    formulation: the window's sort pass disappears, and the whole
-    upstream signature pipeline exists ONCE in the plan instead of once
-    per join side."""
-    bands = _minhash_bands_uncapped(sh)
+    The band rows come straight off the per-document source, so this
+    groupBy(band, mh) is the signature pipeline's only exchange. It both
+    applies the cap (size(ds) between 2 and the cap — singleton buckets
+    can produce no pair, and buckets above the cap are dropped) and
+    stages the bucket for _bucket_pairs."""
     return (
-        bands.groupBy("band", "mh")
+        _minhash_bands_uncapped(src)
+        .groupBy("band", "mh")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .filter(F.size("ds").between(2, _LSH_BUCKET_CAP))
     )
@@ -1511,44 +1604,9 @@ def _bucket_pairs(buckets: DataFrame, ds: str = "ds") -> DataFrame:
     )
 
 
-def _minhash_bands_uncapped(sh: DataFrame) -> DataFrame:
-    """The band signatures BEFORE the bucket cap — split out so the cap
-    diagnostics (tools/capstress.py) can histogram raw bucket sizes with
-    exactly the production signature pipeline."""
-    nsig = _LSH_BANDS * _LSH_ROWS
-    base = (
-        F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
-        % _MH_P
-    )
-    proj = sh.select("doc_id", base.alias("hb"))
-    lane = lambda i: (
-        F.lit(_MH_AB[i][0]) * F.col("hb") + F.lit(_MH_AB[i][1])
-    ) % _MH_P
-    agg = proj.groupBy("doc_id").agg(
-        *[F.min(lane(i)).alias("m%d" % i) for i in range(nsig)]
-    )
-    return agg.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.shiftleft(F.col("m%d" % (b * _LSH_ROWS)), 31)
-                            + F.col("m%d" % (b * _LSH_ROWS + 1))
-                        ).alias("mh"),
-                    )
-                    for b in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("bm"),
-    ).select("doc_id", F.col("bm.band").alias("band"), F.col("bm.mh").alias("mh"))
-
-
-def _minhash_pairs(sh: DataFrame) -> DataFrame:
+def _minhash_pairs(src: DataFrame) -> DataFrame:
     return (
-        _bucket_pairs(_minhash_buckets(sh))
+        _bucket_pairs(_minhash_buckets(src))
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
@@ -1557,18 +1615,12 @@ def _minhash_pairs(sh: DataFrame) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate candidates: word-3-gram shingles ->
     8 bands x 2-lane universal-hash minhash signatures (one md5 per
-    shingle, lanes packed into a 62-bit long — see _MH_AB) -> bucket join
-    on any matching band, with oversized buckets capped (see
-    _LSH_BUCKET_CAP). Scale path for dedup: no O(n^2) pairs, the band
-    join is the only shuffle, and the cap bounds the worst bucket's
-    fan-out at corpus scale."""
-    docs = _rebalance(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh")
-    )
-    return _minhash_pairs(sh)
+    shingle, lanes packed into a 62-bit long — see _MH_AB) computed per
+    document -> bucket join on any matching band, with oversized
+    buckets capped (see _LSH_BUCKET_CAP). Scale path for dedup: no
+    O(n^2) pairs, the band bucketing is the only signature shuffle, and
+    the cap bounds the worst bucket's fan-out at corpus scale."""
+    return _minhash_pairs(_shingle_source(spark, sf_dir))
 
 
 # shared CTE prefix: shingles -> capped b x r band signatures (kept in
@@ -1672,12 +1724,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidate pairs from shared shingles, never a cross join). Shingles
     with document frequency > _SHINGLE_DF_CAP are dropped first, which
     bounds the self-join's worst key at DF_CAP^2 rows."""
-    docs = _rebalance(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    sh_all = docs.select(
-        "doc_id", F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh")
-    )
+    sh_all = _shingle_index(_shingle_source(spark, sf_dir))
     # ONE groupBy(sh) both applies the DF cap (replacing a window-count
     # pass, i.e. a full sort of the inverted index) and stages each
     # shingle's posting list for pair generation; sizes and pairs both
@@ -1735,31 +1782,37 @@ def _cascade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates -> exact n-gram Jaccard >= 0.5. Shared by dedup_cascade
     and dedup_clusters.
 
+    Both inputs derive row-local from the one per-document
+    _shingle_source: the candidates from its band signatures, the
+    intersection from its exploded index, whose rows carry each
+    document's set size — so no per-document size aggregate or size
+    join is needed.
+
     (An array_intersect formulation over per-document shingle-SET
     columns was tried in round 6 and rejected on measurement: the
     planner broadcasts the corpus-side set table at test scale, and
     with sort-merge hints the two set-array shuffles still measured
     slower than this exploded-index join, whose candidate side the
     planner broadcasts.)"""
-    docs = _rebalance(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh")
-    )
-    cand = _minhash_pairs(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    src = _shingle_source(spark, sf_dir)
+    sh = _shingle_index(src)
     inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        _minhash_pairs(src)
+        .join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(
             sh.alias("sb"),
             (F.col("doc_b") == F.col("sb.doc_id"))
             & (F.col("sa.sh") == F.col("sb.sh")),
         )
-        .groupBy("doc_a", "doc_b")
+        .groupBy(
+            "doc_a",
+            "doc_b",
+            F.col("sa.sz").alias("sz_a"),
+            F.col("sb.sz").alias("sz_b"),
+        )
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    return _jaccard_verify(inter, sizes)
+    return _jaccard_filter(inter)
 
 
 def q_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1962,33 +2015,33 @@ _SIMHASH_BLOCKS = 4
 _SIMHASH_MAX_HAMMING = 3
 
 
+#: the 60-bit SimHash fingerprint of a document as ONE SQL expression
+#: over its shingle hashes hs: one pass over hs accumulates the 60 +1/-1
+#: bit votes, then bit b is set when its vote is positive. hs appears
+#: only as an argument, never inside a lambda body: Catalyst inlines a
+#: once-referenced projection into its consumer, and a lambda body
+#: re-evaluates its non-lambda subexpressions per element — the whole
+#: shingle kernel would run once per bit.
+_SIMHASH_FP_SQL = (
+    "aggregate(transform(aggregate(hs, array_repeat(0, %d), "
+    "(votes, h) -> transform(votes, "
+    "(v, b) -> v + IF((shiftright(h, b) & 1) = 1, 1, -1))), "
+    "(v, b) -> IF(v > 0, shiftleft(1L, b), 0L)), 0L, (fp, bit) -> fp | bit)"
+    % _SIMHASH_BITS
+)
+
+
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: 60-bit sign-sum fingerprint over the
     document's shingle hashes, 4x15-bit block banding for candidates
     (Hamming <= 3 guarantees a shared block), exact Hamming verify.
-    The fingerprint is one aggregation pass (60 conditional sums with
-    map-side combine); candidates come from an equi-join on block value,
+    The fingerprint is computed per document from _shingle_source's
+    hash array (_SIMHASH_FP_SQL), so the block bucketing is the first
+    exchange after the source; candidates come from the block buckets,
     never an all-pairs comparison."""
-    docs = _rebalance(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+    fps = _shingle_source(spark, sf_dir).select(
+        "doc_id", F.expr(_SIMHASH_FP_SQL).alias("simhash")
     )
-    sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh")
-    )
-    h = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
-    bits = sh.select("doc_id", h.alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias("b%d" % b)
-        for b in range(_SIMHASH_BITS)
-    ]
-    agg = bits.groupBy("doc_id").agg(*votes)
-    fp = None
-    for b in range(_SIMHASH_BITS):
-        term = F.when(F.col("b%d" % b) > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        fp = term if fp is None else fp + term
-    fps = agg.select("doc_id", fp.cast("long").alias("simhash"))
     width = _SIMHASH_BITS // _SIMHASH_BLOCKS
     mask = (1 << width) - 1
     blocks = fps.select(
@@ -2001,8 +2054,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blk_val", F.expr(f"shiftright(simhash, blk * {width}) & {mask}")
     )
     # bucket-collect + chained-explode pair generation (see _bucket_pairs)
-    # instead of a self-join: the fingerprint aggregation upstream exists
-    # once in the plan rather than once per join side, and the block
+    # instead of a self-join: the fingerprint upstream exists once in
+    # the plan rather than once per join side, and the block
     # sort/shuffle of the window-free join disappears. array_sort on the
     # (doc_id, simhash) structs orders by doc_id (unique), so a < b holds
     # for every emitted pair exactly as the join's a.doc_id < b.doc_id.
@@ -2856,6 +2909,25 @@ def _ivf_params(n: int):
     return cells, max(1, n // s)
 
 
+def _raise_bad_vector(rb, dim: int):
+    """Name the first vector of an Arrow batch that is NULL, holds a
+    NULL value or does not have ``dim`` values — which would otherwise
+    surface as a reshape error or as NaN cosines."""
+    for vid, v in zip(rb.column("vec_id").to_pylist(), rb.column("e").to_pylist()):
+        if v is None:
+            what = "NULL"
+        elif len(v) != dim:
+            what = "%d values long" % len(v)
+        elif None in v:
+            what = "holding a NULL value"
+        else:
+            continue
+        raise ValueError(
+            "ann: embedding of vec_id %s is %s; every embedding needs %d "
+            "non-NULL values" % (vid, what, dim)
+        )
+
+
 def _ivf_assign(emb: DataFrame, cent_rows) -> DataFrame:
     """Full-corpus IVF cell assignment, (vec_id, e) -> (vec_id, cell, ne,
     nen), as ONE numpy mapInArrow stage (guide §4.2: hand whole batches
@@ -2902,7 +2974,11 @@ def _ivf_assign(emb: DataFrame, cent_rows) -> DataFrame:
             if n == 0:
                 continue
             e_col = rb.column("e")
-            E = np.asarray(e_col.flatten().to_numpy(zero_copy_only=False))
+            flat = e_col.flatten()
+            lens = np.diff(e_col.offsets.to_numpy())
+            if e_col.null_count or flat.null_count or (lens != dim).any():
+                _raise_bad_vector(rb, dim)
+            E = np.asarray(flat.to_numpy(zero_copy_only=False))
             E = E.reshape(n, dim)
             en_acc = np.zeros(n)
             dots = np.zeros((n, len(cells)))

@@ -3,8 +3,10 @@ embedding_topk, and the LSH candidate space staying sub-quadratic.
 
 The reference has no ANN operator — these are the training-data-pipeline
 extensions; the correctness driver checks both queries against DuckDB
-oracles that replicate the same plan, so this file checks *quality*
-(recall, candidate-count bounds), not value parity.
+oracles that replicate the same plan, so the ANN tests here check
+*quality* (recall, candidate-count bounds), not value parity. The
+shingle-family tests at the end do check value parity against the
+oracles: at sf0.01 and on degenerate documents.
 """
 
 import pytest
@@ -95,7 +97,48 @@ def test_simhash_pairs_are_near_duplicates(spark):
     assert len(false_pos) <= len(sim) * 0.5, f"too many weak pairs: {false_pos}"
 
 
-def test_shingles_short_doc_parity_with_oracle(spark):
+def _write_documents(d, docs):
+    """docs -> d/documents.parquet as ONE file, readable by both engines."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids, texts = zip(*docs)
+    pq.write_table(
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "text": list(texts)}),
+        f"{d}/documents.parquet",
+    )
+
+
+def _oracle_mismatches(spark, sf_dir, names):
+    """Run each named query on Spark and its ORACLES entry in DuckDB over
+    the same parquet files; return {name: reason} for every query whose
+    columns or normalized rows differ, and the Spark rows of each."""
+    import duckdb
+
+    from raptor_spark.queries import ORACLES, QUERIES
+    from tools.check_oracle import normalize
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    bad, rows = {}, {}
+    for name in names:
+        sdf = QUERIES[name](spark, sf_dir)
+        rows[name] = [r.asDict() for r in sdf.collect()]
+        res = con.sql(ORACLES[name])
+        if sorted(sdf.columns) != sorted(res.columns):
+            bad[name] = "columns %s != %s" % (sdf.columns, res.columns)
+            continue
+        got = normalize([tuple(r.values()) for r in rows[name]], sdf.columns)
+        want = normalize(res.fetchall(), res.columns)
+        if got != want:
+            bad[name] = "%d rows, oracle %d" % (len(got), len(want))
+    con.close()
+    return bad, rows
+
+
+def test_shingles_short_doc_parity_with_oracle(spark, tmp_path):
     """Word-3-gram shingling must agree between the Spark column
     expression and the DuckDB oracle CTE for EVERY token count,
     including documents shorter than the shingle width: both sides
@@ -105,9 +148,7 @@ def test_shingles_short_doc_parity_with_oracle(spark):
     pair in Spark and invisible to the oracle."""
     import duckdb
 
-    from pyspark.sql import functions as F
-
-    from raptor_spark.queries import _shingles
+    from raptor_spark.queries import _shingle_index, _shingle_source
 
     docs = [
         (1, "one"),
@@ -116,12 +157,10 @@ def test_shingles_short_doc_parity_with_oracle(spark):
         (4, "four whitespace split tokens"),
         (5, "  padded   with   extra   spaces  "),
     ]
-    sdf = spark.createDataFrame(docs, "doc_id int, text string")
+    _write_documents(tmp_path, docs)
     spark_sh = {
         (r.doc_id, r.sh)
-        for r in sdf.select(
-            "doc_id", F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh")
-        ).collect()
+        for r in _shingle_index(_shingle_source(spark, str(tmp_path))).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id INT, text VARCHAR)")
@@ -143,3 +182,80 @@ def test_shingles_short_doc_parity_with_oracle(spark):
     assert not any(d in (1, 2) for d, _ in spark_sh)
     # and a 3-token doc has exactly one
     assert sum(1 for d, _ in spark_sh if d == 3) == 1
+
+
+def test_shingle_signatures_degenerate_docs_parity_with_oracle(spark, tmp_path):
+    """Documents without a shingle — empty, whitespace-only, NULL, 1 and
+    2 tokens — get no minhash/simhash signature and are in no pair, on
+    Spark exactly as in the oracles. Without the source's shingle-count
+    filter, array_min over an empty lane makes a NULL band key and the
+    empty simhash vote a zero fingerprint, pairing all of them."""
+    from raptor_spark.queries import _shingle_source
+
+    fox = "the quick brown fox jumps over the lazy dog"
+    docs = [
+        (1, ""),
+        (2, "   "),
+        (3, "one"),
+        (4, "two tokens"),
+        (5, None),
+        (6, "now three tokens"),
+        (7, fox),
+        (8, fox),
+        (9, "a b c a b c a b c a b c"),
+        (10, "two tokens"),
+    ]
+    _write_documents(tmp_path, docs)
+    d = str(tmp_path)
+    assert {r.doc_id for r in _shingle_source(spark, d).collect()} == {6, 7, 8, 9}
+    names = ["dedup_minhash", "dedup_simhash", "dedup_cascade"]
+    bad, rows = _oracle_mismatches(spark, d, names)
+    assert not bad, bad
+    for name in names:
+        pairs = {(r["doc_a"], r["doc_b"]) for r in rows[name]}
+        assert (7, 8) in pairs, (name, pairs)
+        assert not {a for p in pairs for a in p} & {1, 2, 3, 4, 5, 10}, (
+            name, pairs
+        )
+
+
+def test_shingle_family_parity_with_oracle(spark):
+    """Every shingle-based query equals its DuckDB oracle at sf0.01 —
+    the tier-1 share of tools/check_oracle.py for this family."""
+    import time
+
+    names = [
+        "dedup_minhash",
+        "dedup_jaccard",
+        "dedup_cascade",
+        "dedup_clusters",
+        "dedup_simhash",
+        "corpus_curate",
+    ]
+    t0 = time.time()
+    bad, rows = _oracle_mismatches(spark, SF_DIR, names)
+    assert not bad, bad
+    assert all(rows[n] for n in names), {n: len(rows[n]) for n in names}
+    print("shingle-family oracle parity: %.1f s" % (time.time() - t0))
+
+
+@pytest.mark.parametrize(
+    "bad_row, why",
+    [
+        ((2, [0.0, 1.0]), "2 values long"),
+        ((2, None), "NULL"),
+        ((2, [0.0, None, 1.0]), "holding a NULL value"),
+    ],
+)
+def test_ivf_assign_rejects_degenerate_vectors(spark, bad_row, why):
+    """A ragged or NULL embedding fails the IVF assignment with an error
+    naming its vec_id, instead of a reshape error or NaN cosines."""
+    from raptor_spark.queries import _ivf_assign
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), bad_row, (3, [0.0, 0.0, 1.0])],
+        "vec_id bigint, e array<double>",
+    ).coalesce(1)
+    cent = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
+    with pytest.raises(Exception, match="vec_id 2 is %s" % why):
+        _ivf_assign(emb, cent).collect()

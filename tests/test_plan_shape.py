@@ -107,6 +107,23 @@ def test_curate_scan_prunes_columns(spark):  # noqa: F811
         assert "source" not in line and "n_chars" not in line, line
 
 
+@pytest.mark.parametrize(
+    "name, max_exchanges",
+    [("dedup_minhash", 3), ("dedup_simhash", 3), ("dedup_cascade", 8)],
+)
+def test_shingle_signatures_stay_per_document(spark, name, max_exchanges):  # noqa: F811
+    """Shingle signatures — minhash bands, simhash fingerprints, set
+    sizes — are computed row-local from the one per-document shingle
+    source, so no exchange regroups exploded shingles by doc_id.
+    minhash/simhash: rebalance, bucket grouping, pair dedup (was 4);
+    cascade: 8 (was 14). An explode -> groupBy(doc_id) signature or a
+    per-document size aggregate adds exchanges and fails here."""
+    from raptor_spark.queries import QUERIES
+
+    plan = _formatted_plan(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    assert _n_exchanges(plan) <= max_exchanges, plan
+
+
 def test_nt_sink_majority_stays_in_codegen(spark):  # noqa: F811
     """The N-Triples sink's fast branch renders with pure column
     expressions; the kernel fallback exists but ASCII-clean rows never

@@ -89,7 +89,8 @@ def measure(spark, sf_dir: str) -> dict:
         QUERIES,
         _emb_lsh_buckets_uncapped,
         _minhash_bands_uncapped,
-        _shingles,
+        _shingle_index,
+        _shingle_source,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -105,13 +106,10 @@ def measure(spark, sf_dir: str) -> dict:
         "all_pairs_vecs": n_vecs * (n_vecs - 1) // 2,
     }
 
-    sh = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh"),
-    )
+    src = _shingle_source(spark, sf_dir)
 
     # --- minhash band buckets ------------------------------------------
-    sizes = _minhash_bands_uncapped(sh).groupBy("band", "mh").count()
+    sizes = _minhash_bands_uncapped(src).groupBy("band", "mh").count()
     kept, dropped = (
         sizes.filter(F.col("count") <= _LSH_BUCKET_CAP),
         sizes.filter(F.col("count") > _LSH_BUCKET_CAP),
@@ -126,7 +124,7 @@ def measure(spark, sf_dir: str) -> dict:
     }
 
     # --- shingle inverted index (jaccard) ------------------------------
-    df_sizes = sh.groupBy("sh").count()
+    df_sizes = _shingle_index(src).groupBy("sh").count()
     kept, dropped = (
         df_sizes.filter(F.col("count") <= _SHINGLE_DF_CAP),
         df_sizes.filter(F.col("count") > _SHINGLE_DF_CAP),

@@ -9,9 +9,12 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -41,14 +44,22 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    # raptor_spark is imported here and by the Python workers, which
+    # inherit PYTHONPATH through the JVM the session below starts
+    if _REPO not in sys.path:
+        sys.path.insert(0, _REPO)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (_REPO, os.environ.get("PYTHONPATH")) if p
+    )
+
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master("local[*]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -58,36 +58,23 @@ def _noop(df):
 
 def probe_dedup(spark, sf_dir):
     from raptor_spark.queries import (
+        _SIMHASH_FP_SQL,
         _minhash_buckets,
         _minhash_pairs,
         _rebalance,
-        _shingles,
+        _shingle_index,
+        _shingle_source,
         QUERIES,
     )
 
     docs = _rebalance(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     _t(spark, "dedup: docs scan+rebalance", lambda: _noop(docs))
-    sh = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingles(F.col("text")))).alias("sh"),
-    )
-    _t(spark, "dedup: shingle explode (sh)", lambda: _noop(sh))
-    shsets = docs.select(
-        "doc_id", F.array_distinct(_shingles(F.col("text"))).alias("shs")
-    )
-    _t(spark, "dedup: shingle SETS (no explode)", lambda: _noop(shsets))
-    base = (
-        F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
-        % 2147483647
-    )
-    _t(
-        spark,
-        "dedup: sh + md5 base",
-        lambda: _noop(sh.select("doc_id", base.alias("hb"))),
-    )
-    buckets = _minhash_buckets(sh)
+    src = _shingle_source(spark, sf_dir)
+    _t(spark, "dedup: shingle source (shs, hs)", lambda: _noop(src))
+    _t(spark, "dedup: shingle index (explode)", lambda: _noop(_shingle_index(src)))
+    buckets = _minhash_buckets(src)
     _t(spark, "dedup: capped buckets", lambda: _noop(buckets))
-    _t(spark, "dedup: minhash pairs (join)", lambda: _noop(_minhash_pairs(sh)))
+    _t(spark, "dedup: minhash pairs (join)", lambda: _noop(_minhash_pairs(src)))
     _t(
         spark,
         "dedup: q_dedup_minhash full",
@@ -103,17 +90,8 @@ def probe_dedup(spark, sf_dir):
         "dedup: q_dedup_jaccard full",
         lambda: QUERIES["dedup_jaccard"](spark, sf_dir).count(),
     )
-    # simhash decomposition
-    h = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
-    bits = sh.select("doc_id", h.alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias("b%d" % b)
-        for b in range(60)
-    ]
-    agg = bits.groupBy("doc_id").agg(*votes)
-    _t(spark, "simhash: vote agg only", lambda: _noop(agg))
+    fps = src.select("doc_id", F.expr(_SIMHASH_FP_SQL).alias("simhash"))
+    _t(spark, "simhash: fingerprints only", lambda: _noop(fps))
     _t(
         spark,
         "simhash: q_dedup_simhash full",
