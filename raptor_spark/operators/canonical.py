@@ -1,9 +1,10 @@
 """Canonicalization + dedup column operators.
 
-Pure column expressions (whole-stage-codegen friendly) for the term algebra
-the reference applies at construction time (src/raptor_term.c:150-260),
-plus the graph-materialization dedup, the Spark analogue of the abbrev
-serializers' AVL-tree duplicate check (src/raptor_abbrev.c:354-397).
+Pure column expressions (whole-stage-codegen friendly): the bnode relabel
+and the graph-materialization dedup, the Spark analogue of the abbrev
+serializers' AVL-tree duplicate check (src/raptor_abbrev.c:354-397). The
+term algebra the reference applies at construction time
+(src/raptor_term.c:150-260) runs in the parse kernel, kernel/terms.py.
 """
 
 from __future__ import annotations
@@ -12,18 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raptor_spark.kernel.terms import KIND_BLANK
-
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-
-def normalize_lang(col):
-    """Lowercase + '_' -> '-' (reference: src/raptor_term.c:241-250)."""
-    return F.translate(F.lower(col), "_", "-")
-
-
-def drop_xsd_string(dt_col):
-    """xsd:string datatype -> NULL (reference: src/raptor_term.c:194-207)."""
-    return F.when(dt_col == XSD_STRING, F.lit(None)).otherwise(dt_col)
 
 
 def relabel_bnodes(triples: DataFrame) -> DataFrame:

@@ -234,13 +234,6 @@ def nt_lines_df(
     )
 
 
-def write_ntriples(triples: DataFrame, path: str, with_graph: bool = True):
-    """Materialize the graph as N-Triples/N-Quads text files."""
-    nt_lines_df(triples, with_graph).withColumnRenamed(
-        "nt_line", "value"
-    ).write.mode("overwrite").text(path)
-
-
 _TRIPLE_STRUCT = ("subj", "pred", "obj_kind", "obj_lex", "obj_datatype",
                   "obj_lang", "graph")
 
@@ -260,16 +253,6 @@ def _grouped_triples(triples: DataFrame, group_col: str) -> DataFrame:
         .groupBy(group_col)
         .agg(F.collect_list("t").alias("ts"))
     )
-
-
-def _structs_to_triples(ts) -> list:
-    return [
-        Triple(
-            t["subj"], t["pred"], int(t["obj_kind"]), t["obj_lex"],
-            t["obj_datatype"], t["obj_lang"], t["graph"],
-        )
-        for t in ts
-    ]
 
 
 def _batch_triple_lists(rb):

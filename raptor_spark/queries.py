@@ -1513,6 +1513,7 @@ _LSH_ROWS = 2
 #: near-identical boilerplate whose k^2 pair fan-out would dominate the
 #: shuffle at corpus scale; such clusters are better handled by the exact
 #: dedup_exact path, so LSH drops them instead of emitting k^2 rows.
+#: _blocks applies the cap.
 _LSH_BUCKET_CAP = 50
 #: universal-hash minhash lanes: each shingle is hashed ONCE (md5 -> 60-bit
 #: prefix, reduced mod the Mersenne prime 2^31-1) and the b*r independent
@@ -1556,45 +1557,39 @@ _MH_BANDS_SQL = "array(%s)" % ", ".join(
 )
 
 
-def _minhash_bands_uncapped(src: DataFrame) -> DataFrame:
-    """(doc_id, hs) -> (doc_id, band, mh): the band signatures BEFORE
-    the bucket cap, computed per document from _shingle_source's hash
-    array — split out so the cap diagnostics (tools/capstress.py) can
-    histogram raw bucket sizes with exactly the production signature
-    pipeline."""
+def _minhash_bands(src: DataFrame) -> DataFrame:
+    """(doc_id, hs) -> (doc_id, band, mh): the band signatures, computed
+    per document from _shingle_source's hash array — the blocking keys
+    of the minhash path (uncapped; _blocks applies the bucket cap)."""
     return src.select(
         "doc_id", F.explode(F.expr(_MH_BANDS_SQL)).alias("bm")
     ).select("doc_id", "bm.band", "bm.mh")
 
 
-def _minhash_buckets(src: DataFrame) -> DataFrame:
-    """(doc_id, hs) -> (band, mh, ds): pair-eligible LSH buckets with the
-    size cap applied — ds is the SORTED doc_id list of each bucket.
-
-    The band rows come straight off the per-document source, so this
-    groupBy(band, mh) is the signature pipeline's only exchange. It both
-    applies the cap (size(ds) between 2 and the cap — singleton buckets
-    can produce no pair, and buckets above the cap are dropped) and
-    stages the bucket for _bucket_pairs."""
-    return (
-        _minhash_bands_uncapped(src)
-        .groupBy("band", "mh")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds").between(2, _LSH_BUCKET_CAP))
+def _blocks(keyed: DataFrame, keys, item, cap=None) -> DataFrame:
+    """(keys..., item) -> (keys..., ds): ONE groupBy(keys) collects each
+    block's SORTED item list ds and drops blocks with more than `cap`
+    members (no cap when None) — the only place a candidate-pair query
+    builds or purges a block. The key functions upstream stay uncapped;
+    _bucket_pairs turns the surviving blocks into pairs. `item` is a
+    column name or a struct whose first field is the unique id."""
+    blocks = keyed.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(item)).alias("ds")
     )
+    return blocks if cap is None else blocks.filter(F.size("ds") <= cap)
 
 
-def _bucket_pairs(buckets: DataFrame, ds: str = "ds") -> DataFrame:
+def _bucket_pairs(blocks: DataFrame) -> DataFrame:
     """(..., ds: sorted array) -> (a, b) for every i < j pair of each
-    bucket, via two CHAINED explodes (posexplode, then explode of the
-    tail slice): a k-element bucket streams its k^2/2 pairs row by row
-    through codegen — the pair set is never materialized as one array
-    value, so memory stays O(k) per bucket while the aggregation buffer
-    upstream is the only place a whole bucket lives at once. Works for
-    plain values and structs (array_sort on structs orders by the first
-    field — the doc id — which is unique)."""
-    ex = buckets.select(
-        F.posexplode(ds).alias("_i", "a"), F.col(ds).alias("_ds")
+    block of two or more, via two CHAINED explodes (posexplode, then
+    explode of the tail slice): a k-element block streams its k^2/2
+    pairs row by row through codegen — the pair set is never
+    materialized as one array value, so memory stays O(k) per block
+    while the aggregation buffer upstream is the only place a whole
+    block lives at once. Works for plain values and structs (array_sort
+    on structs orders by the first field — the id — which is unique)."""
+    ex = blocks.filter(F.size("ds") >= 2).select(
+        F.posexplode("ds").alias("_i", "a"), F.col("ds").alias("_ds")
     )
     return ex.select(
         "a",
@@ -1605,8 +1600,11 @@ def _bucket_pairs(buckets: DataFrame, ds: str = "ds") -> DataFrame:
 
 
 def _minhash_pairs(src: DataFrame) -> DataFrame:
+    blocks = _blocks(
+        _minhash_bands(src), ["band", "mh"], "doc_id", _LSH_BUCKET_CAP
+    )
     return (
-        _bucket_pairs(_minhash_buckets(src))
+        _bucket_pairs(blocks)
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
@@ -1691,7 +1689,7 @@ FROM bands a JOIN bands b
 #: it; high-DF shingles also carry no near-dup signal (they are corpus
 #: boilerplate). Jaccard is then computed over the informative-shingle
 #: sets on BOTH sides of the ratio — a consistent semantic, not a biased
-#: estimate of full-set Jaccard.
+#: estimate of full-set Jaccard. _blocks applies the cap.
 _SHINGLE_DF_CAP = 100
 
 
@@ -1706,9 +1704,31 @@ def _jaccard_filter(j):
     )
 
 
-def _jaccard_verify(inter, sizes):
-    """Attach per-doc shingle-set sizes to (doc_a, doc_b, common)
-    intersection counts and apply the shared threshold filter."""
+def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """n-gram Jaccard verification of near-dup candidates: exact overlap
+    of distinct word-3-gram shingle sets over a shingle-inverted index
+    (candidate pairs from shared shingles, never a cross join). Shingles
+    with document frequency > _SHINGLE_DF_CAP are dropped first, which
+    bounds the worst block at DF_CAP^2 pairs."""
+    # one block per shingle: its capped, sorted posting list. Sizes and
+    # pairs both read this single exchange; the k^2 pair fan-out streams
+    # through the chained explode instead of a self-join's shuffle fetch.
+    blocks = _blocks(
+        _shingle_index(_shingle_source(spark, sf_dir)),
+        ["sh"],
+        "doc_id",
+        _SHINGLE_DF_CAP,
+    )
+    sizes = (
+        blocks.select(F.explode("ds").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("sz"))
+    )
+    inter = (
+        _bucket_pairs(blocks)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
     j = (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .withColumnRenamed("sz", "sz_a")
@@ -1716,36 +1736,6 @@ def _jaccard_verify(inter, sizes):
         .withColumnRenamed("sz", "sz_b")
     )
     return _jaccard_filter(j)
-
-
-def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard verification of near-dup candidates: exact overlap
-    of distinct word-3-gram shingle sets over a shingle-inverted index
-    (candidate pairs from shared shingles, never a cross join). Shingles
-    with document frequency > _SHINGLE_DF_CAP are dropped first, which
-    bounds the self-join's worst key at DF_CAP^2 rows."""
-    sh_all = _shingle_index(_shingle_source(spark, sf_dir))
-    # ONE groupBy(sh) both applies the DF cap (replacing a window-count
-    # pass, i.e. a full sort of the inverted index) and stages each
-    # shingle's posting list for pair generation; sizes and pairs both
-    # read this single exchange. The k^2 pair fan-out streams through
-    # the chained explode instead of a self-join's shuffle fetch.
-    buckets = (
-        sh_all.groupBy("sh")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") <= _SHINGLE_DF_CAP)
-    )
-    sizes = (
-        buckets.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("sz"))
-    )
-    inter = (
-        _bucket_pairs(buckets.filter(F.size("ds") >= 2))
-        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return _jaccard_verify(inter, sizes)
 
 
 _JACCARD_ORACLE = """
@@ -2007,9 +1997,9 @@ FROM lab JOIN sz USING (cluster_rep)
 #: SimHash width and banding: 60 fingerprint bits (15 md5 hex chars —
 #: stays inside a signed 64-bit lane on both engines) split into 4 blocks
 #: of 15. By pigeonhole, any pair at Hamming distance <= 3 shares at least
-#: one full block, so the candidate join is a plain equi-join on
-#: (block_id, block_value) — no pair enumeration — and the exact
-#: bit_count(xor) verify touches candidates only.
+#: one full block, so candidates are the pairs inside each
+#: (block_id, block_value) block, and the exact bit_count(xor) verify
+#: touches candidates only.
 _SIMHASH_BITS = 60
 _SIMHASH_BLOCKS = 4
 _SIMHASH_MAX_HAMMING = 3
@@ -2053,23 +2043,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "blk_val", F.expr(f"shiftright(simhash, blk * {width}) & {mask}")
     )
-    # bucket-collect + chained-explode pair generation (see _bucket_pairs)
-    # instead of a self-join: the fingerprint upstream exists once in
-    # the plan rather than once per join side, and the block
-    # sort/shuffle of the window-free join disappears. array_sort on the
-    # (doc_id, simhash) structs orders by doc_id (unique), so a < b holds
-    # for every emitted pair exactly as the join's a.doc_id < b.doc_id.
-    buckets = (
-        blocks.groupBy("blk", "blk_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("ds")
-        )
-        .filter(F.size("ds") >= 2)
-    )
+    # blocks of (doc_id, simhash) structs sort by doc_id (unique), so
+    # a < b holds for every emitted pair exactly as the oracle join's
+    # a.doc_id < b.doc_id. No cap: the oracle has none.
     cand = (
-        _bucket_pairs(buckets)
+        _bucket_pairs(
+            _blocks(blocks, ["blk", "blk_val"], F.struct("doc_id", "simhash"))
+        )
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -2133,7 +2113,7 @@ FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
 #: x 4 tables, a 64x reduction vs all-pairs; recall comes from the OR over
 #: tables (a true near-dup agrees on most sign bits, so the chance all 4
 #: disjoint 8-bit slices break is small). Oversized buckets (degenerate
-#: regions) are capped like the minhash path.
+#: regions) are capped like the minhash path; _blocks applies the cap.
 _EMB_TABLES = 4
 _EMB_BITS = 8
 _EMB_BUCKET_CAP = 200
@@ -2162,32 +2142,25 @@ def _emb_norm(c):
     )
 
 
-def _emb_cos_cols(a, b):
-    """Cosine between two array<double> COLUMN expressions (usable inside
-    higher-order-function lambdas, not just on named top-level columns)."""
+def _emb_cos(a: str, b: str):
+    """Cosine between two named array<double> columns."""
+    a, b = F.col(a), F.col(b)
     return _emb_dot(a, b) / (_emb_norm(a) * _emb_norm(b))
 
 
-def _emb_cos(a: str, b: str):
-    return _emb_cos_cols(F.col(a), F.col(b))
-
-
-def _emb_lsh_buckets(emb: DataFrame) -> DataFrame:
-    """(vec_id, e) -> (vec_id, tab, bucket): sign-bit keys per table,
-    bucket-size cap applied on the (tab, bucket) partitioning the
-    candidate join reuses."""
-    bucketed = _emb_lsh_buckets_uncapped(emb)
-    w = Window.partitionBy("tab", "bucket")
-    return (
-        bucketed.withColumn("bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("bsz") <= _EMB_BUCKET_CAP)
-        .drop("bsz")
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e: array<double>) — the embeddings table as every
+    embedding query reads it."""
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
     )
 
 
-def _emb_lsh_buckets_uncapped(emb: DataFrame) -> DataFrame:
-    """Sign-bit bucket keys BEFORE the bucket cap (see
-    _emb_lsh_buckets; split out for the cap diagnostics)."""
+def _emb_lsh_keys(emb: DataFrame) -> DataFrame:
+    """(vec_id, e) -> (vec_id, tab, bucket): the sign-bit blocking key of
+    each vector in each table (uncapped; _blocks applies the bucket
+    cap)."""
     tabs = emb.select(
         "vec_id",
         F.explode(F.array(*[F.lit(t) for t in range(_EMB_TABLES)])).alias("tab"),
@@ -2208,23 +2181,15 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     space (see _EMB_TABLES/_EMB_BITS), ids-only pair dedup across tables,
     then exact cosine verifies candidates (threshold 0.35 — the synthetic
     embeddings are near-orthogonal, so the tail above 0.35 is the
-    "near-duplicate" set). Every join is a plain equi-join; the verify
-    stage re-fetches vectors by id so the wide arrays never ride through
-    the bucket shuffle."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
+    "near-duplicate" set). The verify stage re-fetches vectors by id so
+    the wide arrays never ride through the bucket shuffle."""
+    emb = _embeddings(spark, sf_dir)
+    blocks = _blocks(
+        _emb_lsh_keys(emb), ["tab", "bucket"], "vec_id", _EMB_BUCKET_CAP
     )
-    bucketed = _emb_lsh_buckets(emb)
     cand = (
-        bucketed.alias("a")
-        .join(
-            bucketed.alias("b"),
-            (F.col("a.tab") == F.col("b.tab"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+        _bucket_pairs(blocks)
+        .select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"))
         .distinct()
     )
     # per-vector norms computed once at the re-fetch (same _emb_norm
@@ -2771,25 +2736,19 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over the embedding column: query set =
     vec_id < 8, ranked among all candidates. Baseline ANN path; the
     candidate side broadcasts the (tiny) query set."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-            "embedding"
-        ),
-    )
     # stage each side's norm once per row (candidate norms were being
     # re-folded per (query, candidate) pair); _emb_norm is the module's
     # single ordered-fold norm, so sim = dot / (qn * cn) is bit-identical
     # to the inline _emb_cos it replaces
-    withn = emb.select(
-        "vec_id", "embedding", _emb_norm(F.col("embedding")).alias("nrm")
+    withn = _embeddings(spark, sf_dir).select(
+        "vec_id", "e", _emb_norm(F.col("e")).alias("nrm")
     )
     dots = (
         withn.alias("c")
         .crossJoin(F.broadcast(withn.filter(F.col("vec_id") < 8).alias("q")))
         .filter(F.col("q.vec_id") != F.col("c.vec_id"))
     )
-    sim = _emb_dot(F.col("q.embedding"), F.col("c.embedding")) / (
+    sim = _emb_dot(F.col("q.e"), F.col("c.e")) / (
         F.col("q.nrm") * F.col("c.nrm")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -2833,19 +2792,15 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of cosine evaluations the bucketed path pays — the evidence
     that the candidate space stays sub-quadratic. (The usable ANN query
     is ann_topk below.)"""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
-    bucketed = _emb_lsh_buckets(emb)
     # a bucket of k vectors contributes exactly k*(k-1)/2 ordered pairs,
-    # so the count is pure arithmetic over bucket sizes — the self-join
-    # this replaces enumerated every pair row only to count it (and
-    # buckets of size 1 produced no row, hence the k >= 2 filter)
+    # so the count is pure arithmetic over bucket sizes — no pair row is
+    # enumerated. Buckets of one vector have no pair, and buckets above
+    # _EMB_BUCKET_CAP are the ones _blocks drops in embedding_neardup.
     return (
-        bucketed.groupBy("tab", "bucket")
+        _emb_lsh_keys(_embeddings(spark, sf_dir))
+        .groupBy("tab", "bucket")
         .agg(F.count(F.lit(1)).alias("k"))
-        .filter(F.col("k") >= 2)
+        .filter(F.col("k").between(2, _EMB_BUCKET_CAP))
         .select(
             "tab",
             "bucket",
@@ -3032,13 +2987,9 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     _t0 = _time.time()
-    src = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n = src.count()
+    emb = _embeddings(spark, sf_dir)
+    n = emb.count()
     cells, denom = _ivf_params(n)
-    emb = src.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
     hv = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
     ).cast("long")

@@ -5,8 +5,9 @@ The reference has no ANN operator — these are the training-data-pipeline
 extensions; the correctness driver checks both queries against DuckDB
 oracles that replicate the same plan, so the ANN tests here check
 *quality* (recall, candidate-count bounds), not value parity. The
-shingle-family tests at the end do check value parity against the
-oracles: at sf0.01 and on degenerate documents.
+shingle-family and hot-block tests at the end do check value parity
+against the oracles: at sf0.01, on degenerate documents and at each
+block cap's boundary.
 """
 
 import pytest
@@ -113,15 +114,18 @@ def _oracle_mismatches(spark, sf_dir, names):
     """Run each named query on Spark and its ORACLES entry in DuckDB over
     the same parquet files; return {name: reason} for every query whose
     columns or normalized rows differ, and the Spark rows of each."""
+    import os
+
     import duckdb
 
     from raptor_spark.queries import ORACLES, QUERIES
     from tools.check_oracle import normalize
 
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
+    for table in ("documents", "embeddings"):
+        path = f"{sf_dir}/{table}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
     bad, rows = {}, {}
     for name in names:
         sdf = QUERIES[name](spark, sf_dir)
@@ -237,6 +241,72 @@ def test_shingle_family_parity_with_oracle(spark):
     assert not bad, bad
     assert all(rows[n] for n in names), {n: len(rows[n]) for n in names}
     print("shingle-family oracle parity: %.1f s" % (time.time() - t0))
+
+
+def _group_pairs(ids):
+    return {(a, b) for a in ids for b in ids if a < b}
+
+
+@pytest.mark.parametrize(
+    "name, cap",
+    [("dedup_minhash", 50), ("dedup_jaccard", 100), ("dedup_simhash", None)],
+)
+def test_hot_block_cap_boundary_parity_with_oracle(spark, tmp_path, name, cap):
+    """A block of exactly `cap` identical documents survives _blocks and
+    pairs fully; a block of cap + 1 is dropped whole — on Spark exactly
+    as in the oracle's COUNT(*) OVER window. The two groups share no
+    token, so every block holds one group. simhash has no cap (nor does
+    its oracle), so its 60- and 61-document groups both pair fully."""
+    size = cap or 60
+    kept = list(range(1, size + 1))
+    hot = list(range(1001, 1001 + size + 1))
+    docs = [(i, " ".join("k%d" % t for t in range(8))) for i in kept]
+    docs += [(i, " ".join("h%d" % t for t in range(8))) for i in hot]
+    _write_documents(tmp_path, docs)
+    bad, rows = _oracle_mismatches(spark, str(tmp_path), [name])
+    assert not bad, bad
+    pairs = {(r["doc_a"], r["doc_b"]) for r in rows[name]}
+    assert _group_pairs(kept) <= pairs
+    hot_pairs = _group_pairs(hot)
+    if cap is None:
+        assert hot_pairs <= pairs
+    else:
+        assert not hot_pairs & pairs
+
+
+def test_hot_embedding_bucket_cap_boundary_parity_with_oracle(spark, tmp_path):
+    """The embedding bucket cap at its boundary: 200 identical all-+1
+    vectors share one bucket per table (kept, at _EMB_BUCKET_CAP), 201
+    all--1 vectors another (dropped). embedding_neardup and ann_lsh
+    equal their oracles, and only the kept group pairs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from raptor_spark.queries import _EMB_BUCKET_CAP
+
+    kept = list(range(_EMB_BUCKET_CAP))
+    hot = list(range(1000, 1000 + _EMB_BUCKET_CAP + 1))
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(kept + hot, pa.int64()),
+                "embedding": pa.array(
+                    [[1.0] * 32] * len(kept) + [[-1.0] * 32] * len(hot),
+                    pa.list_(pa.float32()),
+                ),
+            }
+        ),
+        f"{tmp_path}/embeddings.parquet",
+    )
+    names = ["embedding_neardup", "ann_lsh"]
+    bad, rows = _oracle_mismatches(spark, str(tmp_path), names)
+    assert not bad, bad
+    pairs = {(r["vec_a"], r["vec_b"]) for r in rows["embedding_neardup"]}
+    assert pairs == _group_pairs(kept)
+    k = _EMB_BUCKET_CAP
+    assert sorted(r["candidate_pairs"] for r in rows["ann_lsh"]) == [
+        k * (k - 1) // 2
+    ] * 4
 
 
 @pytest.mark.parametrize(

@@ -78,7 +78,14 @@ def test_parse_dedup_per_doc(spark):  # noqa: F811
 
 
 @pytest.mark.parametrize(
-    "name", ["corpus_curate", "dedup_minhash", "dedup_simhash", "dedup_jaccard"]
+    "name",
+    [
+        "corpus_curate",
+        "dedup_minhash",
+        "dedup_simhash",
+        "dedup_jaccard",
+        "embedding_neardup",
+    ],
 )
 def test_training_ops_stay_jvm_side(spark, name):  # noqa: F811
     """The dedup/curation operators are pure column algebra: no Python
@@ -121,6 +128,21 @@ def test_shingle_signatures_stay_per_document(spark, name, max_exchanges):  # no
     from raptor_spark.queries import QUERIES
 
     plan = _formatted_plan(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    assert _n_exchanges(plan) <= max_exchanges, plan
+
+
+@pytest.mark.parametrize(
+    "name, max_exchanges", [("embedding_neardup", 4), ("ann_lsh", 1)]
+)
+def test_embedding_blocks_window_free(spark, name, max_exchanges):  # noqa: F811
+    """The embedding LSH queries block through _blocks / one
+    groupBy(tab, bucket): the bucket cap is a size filter on the
+    collected block, never a count() window over (tab, bucket), and
+    embedding_neardup pairs with the chained explode, not a self-join."""
+    from raptor_spark.queries import QUERIES
+
+    plan = _formatted_plan(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    assert "Window" not in plan, plan
     assert _n_exchanges(plan) <= max_exchanges, plan
 
 
@@ -178,12 +200,9 @@ def test_ann_assign_no_exchange(spark):  # noqa: F811
     per row in interpreted higher-order functions; round 6 moved the
     fold to vectorized numpy with ordered per-dimension accumulation,
     which is bit-identical to the JVM fold.)"""
-    from raptor_spark.queries import _ivf_assign
+    from raptor_spark.queries import _embeddings, _ivf_assign
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
+    emb = _embeddings(spark, "/root/testdata/sf0.001")
     dim = len(emb.select("e").first()["e"])
     cent_rows = [(c, [float(c + 1)] * (dim - 1) + [1.0]) for c in range(4)]
     assign = _ivf_assign(emb, cent_rows)

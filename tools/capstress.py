@@ -4,9 +4,10 @@ Every pair-producing join in the dedup/ANN operators is bounded by a
 cap — LSH band-bucket cap (_LSH_BUCKET_CAP), shingle document-frequency
 cap (_SHINGLE_DF_CAP), embedding bucket cap (_EMB_BUCKET_CAP) — so the
 candidate-pair space must stay sub-quadratic as N grows. This tool
-measures that directly: it runs the SAME signature/bucket pipelines the
-production queries use (the *_uncapped helpers in queries.py) on the
-base corpus and on an 8x-replicated copy, and reports per scale:
+measures that directly: it histograms the raw blocks of the SAME key
+functions the production queries block on (_minhash_bands,
+_shingle_index, _emb_lsh_keys in queries.py, all uncapped) on the base
+corpus and on an 8x-replicated copy, and reports per scale:
 
 - bucket/DF histograms: how many buckets (or shingles) crossed the cap
   and how many candidate pairs the cap REMOVED,
@@ -87,17 +88,15 @@ def measure(spark, sf_dir: str) -> dict:
         _LSH_BUCKET_CAP,
         _SHINGLE_DF_CAP,
         QUERIES,
-        _emb_lsh_buckets_uncapped,
-        _minhash_bands_uncapped,
+        _emb_lsh_keys,
+        _embeddings,
+        _minhash_bands,
         _shingle_index,
         _shingle_source,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
+    emb = _embeddings(spark, sf_dir)
     n_docs, n_vecs = docs.count(), emb.count()
     out = {
         "n_docs": n_docs,
@@ -109,7 +108,7 @@ def measure(spark, sf_dir: str) -> dict:
     src = _shingle_source(spark, sf_dir)
 
     # --- minhash band buckets ------------------------------------------
-    sizes = _minhash_bands_uncapped(src).groupBy("band", "mh").count()
+    sizes = _minhash_bands(src).groupBy("band", "mh").count()
     kept, dropped = (
         sizes.filter(F.col("count") <= _LSH_BUCKET_CAP),
         sizes.filter(F.col("count") > _LSH_BUCKET_CAP),
@@ -138,7 +137,7 @@ def measure(spark, sf_dir: str) -> dict:
     }
 
     # --- embedding sign-bit buckets ------------------------------------
-    esizes = _emb_lsh_buckets_uncapped(emb).groupBy("tab", "bucket").count()
+    esizes = _emb_lsh_keys(emb).groupBy("tab", "bucket").count()
     kept, dropped = (
         esizes.filter(F.col("count") <= _EMB_BUCKET_CAP),
         esizes.filter(F.col("count") > _EMB_BUCKET_CAP),

@@ -58,8 +58,10 @@ def _noop(df):
 
 def probe_dedup(spark, sf_dir):
     from raptor_spark.queries import (
+        _LSH_BUCKET_CAP,
         _SIMHASH_FP_SQL,
-        _minhash_buckets,
+        _blocks,
+        _minhash_bands,
         _minhash_pairs,
         _rebalance,
         _shingle_index,
@@ -72,7 +74,9 @@ def probe_dedup(spark, sf_dir):
     src = _shingle_source(spark, sf_dir)
     _t(spark, "dedup: shingle source (shs, hs)", lambda: _noop(src))
     _t(spark, "dedup: shingle index (explode)", lambda: _noop(_shingle_index(src)))
-    buckets = _minhash_buckets(src)
+    buckets = _blocks(
+        _minhash_bands(src), ["band", "mh"], "doc_id", _LSH_BUCKET_CAP
+    )
     _t(spark, "dedup: capped buckets", lambda: _noop(buckets))
     _t(spark, "dedup: minhash pairs (join)", lambda: _noop(_minhash_pairs(src)))
     _t(
@@ -139,15 +143,11 @@ def probe_synth(spark, sf_dir):
 def probe_ann(spark, sf_dir):
     import raptor_spark.queries as Q
 
-    src = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _t(spark, "ann: embeddings count", lambda: src.count())
-    n = src.count()
+    emb = Q._embeddings(spark, sf_dir)
+    _t(spark, "ann: embeddings count", lambda: emb.count())
+    n = emb.count()
     cells, denom = Q._ivf_params(n)
     print("   n=%d cells=%d denom=%d" % (n, cells, denom), flush=True)
-    emb = src.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("e"),
-    )
     hv = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
