@@ -87,52 +87,56 @@ def run_resumable(
     entities: Optional[DataFrame] = None,
     bucket_fn=None,
 ) -> DataFrame:
-    """Resumable materialization: skip buckets already in the manifest,
-    build the graph for the rest, write bucket-partitioned parquet +
-    the north-rule lineage counters (convs, turns parsed, triples
-    emitted, parse errors, link decisions). When an ``entities``
-    dictionary (key, entity_uri) is given, the linking stage runs over
-    the same unfinished buckets and its decisions are materialized under
-    ``links/bucket=``; buckets finished by a PRIOR run without linking
-    get a linking-only catch-up pass (ckpt.link_catchup), so a resume
-    that adds entities never leaves links/ silently incomplete. Returns
-    the manifest rows appended by this run.
+    """Resumable materialization in one pass (plans/checkpoint.py):
+    plan the buckets on the driver from the input's bucket set and the
+    manifest, build the graph once for the buckets with no manifest row,
+    count every lineage counter (convs, turns parsed, triples emitted,
+    parse errors, link decisions) in one aggregate, write the
+    bucket-partitioned parquet, then append the manifest. When an
+    ``entities`` dictionary (key, entity_uri) is given, the linking stage
+    runs over those buckets AND the input's buckets a prior run
+    finished without linking, and its decisions are materialized under
+    ``links/bucket=`` — a resume that adds entities never leaves links/
+    silently incomplete. Returns the manifest rows appended by this run;
+    a run with nothing to do returns no rows and starts no parse or write
+    job.
 
-    The materialization fans into several write/aggregate jobs (triples,
-    errors, links, manifest counters); the parse stage's output is
-    persisted for the duration so the mapInArrow parse stage runs once,
-    not once per job."""
+    The turns feed the parse, the link stage and the counters; the parse
+    output feeds two writes and the counters. Both are persisted for the
+    duration, so the input is read and the mapInArrow parse stage runs
+    once."""
     from pyspark.storagelevel import StorageLevel
 
-    todo = ckpt.filter_unfinished(
-        spark, transcripts, out_dir, n_buckets, bucket_fn=bucket_fn
+    bucketed = ckpt.with_bucket(transcripts, n_buckets, bucket_fn=bucket_fn)
+    parse, relink = ckpt.plan_buckets(
+        spark, bucketed, out_dir, link=entities is not None
     )
-    turns = todo.drop("bucket").persist(StorageLevel.MEMORY_AND_DISK)
+    if not parse and not relink:
+        return ckpt.manifest_frame(spark, [])
+    turns = bucketed.filter(F.col("bucket").isin(parse + relink)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-    docs = reassemble(turns, extra_cols=extra)
+    docs = reassemble(
+        turns.filter(F.col("bucket").isin(parse)), extra_cols=extra
+    )
     parsed = parse_documents(
         docs, base_uri_col=base_uri_col, dedup_per_doc=True
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        triples = relabel_bnodes(triples_of(parsed))
-        errors = errors_of(parsed)
-        links = None
-        if entities is not None:
-            from raptor_spark.operators.link import link_entities
+    links = None
+    if entities is not None:
+        from raptor_spark.operators.link import link_entities
 
-            links = link_entities(turns, entities)
-        manifest = ckpt.write_bucketed(
-            triples, errors, out_dir, n_buckets, turns=turns, links=links,
-            bucket_fn=bucket_fn,
+        # not persisted: a cached frame keeps its shuffle partitions, so
+        # its partitioned write would make n_buckets files per partition;
+        # recomputing this cheap stage lets AQE coalesce its output first
+        links = link_entities(turns, entities)
+    try:
+        return ckpt.write_bucketed(
+            spark, out_dir, n_buckets, parse, relink, turns,
+            relabel_bnodes(triples_of(parsed)), errors_of(parsed),
+            links=links, bucket_fn=bucket_fn,
         )
-        if entities is not None:
-            extra_rows = ckpt.link_catchup(
-                spark, transcripts, out_dir, n_buckets, entities,
-                link_fn=link_entities, bucket_fn=bucket_fn,
-            )
-            if extra_rows is not None:
-                manifest = manifest.unionByName(extra_rows)
-        return manifest
     finally:
         # unpersist even when a write/link stage throws: a long-running
         # session must not accumulate MEMORY_AND_DISK blocks per failure

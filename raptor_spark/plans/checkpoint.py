@@ -1,19 +1,25 @@
 """Resumable bucketed materialization with per-partition lineage manifests.
 
 The job is keyed by conv_id buckets (``bucket = pmod(xxhash64(conv_id), N)``
-— deterministic across runs and retries). Each completed bucket writes its
-output under ``out_dir/triples/bucket=<b>/`` plus a manifest row
-(bucket, convs, triples, errors, parse counters) under ``out_dir/manifest/``.
-A rerun reads the manifest and anti-joins finished buckets out of the input,
-so only unfinished work re-executes: Spark's task retry gives at-least-once
-inside a run; the manifest gives cross-run resume (north-rule requirement;
-the reference has no equivalent — it is a single-process stream).
+— deterministic across runs and retries). A finished bucket has its data
+under ``out_dir/{triples,errors,links}/bucket=<b>/`` and a row (bucket,
+convs, triples, errors, turns, link_decisions, linked, ts) in the
+append-only ``out_dir/manifest/``. pipeline.run_resumable makes one pass:
+``plan_buckets`` decides on the driver which buckets to parse and which to
+relink; the turns and the graph of those buckets are built and
+persisted once; ``write_bucketed`` counts every counter in one
+aggregate, writes the bucket data and appends the manifest last.
+Spark's task retry gives at-least-once inside a run; the manifest gives
+cross-run resume (north-rule requirement; the reference is a
+single-process stream).
+Output paths go through the Hadoop FileSystem API, so ``out_dir`` may be
+any URI Spark writes to.
 """
 
 from __future__ import annotations
 
-import os
-from typing import List, Optional
+import datetime
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,19 +45,34 @@ def with_bucket(
     return df.withColumn("bucket", expr)
 
 
-def finished_buckets(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
-    """(bucket, linked) for every bucket with a manifest row.
+def _sub(out_dir: str, name: str) -> str:
+    return out_dir.rstrip("/") + "/" + name
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` — the filesystem Spark itself
+    resolves the URI to (local, file://, hdfs://, s3a://, ...)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def finished_buckets(
+    spark: SparkSession, out_dir: str
+) -> Optional[Dict[int, bool]]:
+    """{bucket: linked} for every bucket with a manifest row, read on the
+    driver (the manifest holds one small row per bucket and run).
 
     ``linked`` records whether the linking stage has run for the bucket
     (see write_bucketed) — distinct from "linked with zero decisions".
     Manifests may mix schema generations (rows written before the
     linked/turns columns existed), so the read always merges schemas;
-    legacy rows, which na.fill(0)'d link_decisions, are conservatively
-    treated as linked only when decisions were recorded (re-linking a
-    zero-decision bucket is append-idempotent: it writes no link rows).
+    legacy rows, whose link_decisions read 0 when linking did not run,
+    count as linked only when decisions were recorded (re-linking a
+    zero-decision bucket is idempotent: its links partition is replaced).
     """
-    manifest_path = os.path.join(out_dir, "manifest")
-    if not os.path.isdir(manifest_path):
+    manifest_path = _sub(out_dir, "manifest")
+    fs, path = _hadoop_path(spark, manifest_path)
+    if not fs.exists(path):
         return None
     try:
         df = spark.read.option("mergeSchema", "true").parquet(manifest_path)
@@ -67,203 +88,117 @@ def finished_buckets(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
         linked = F.col("link_decisions") > 0
     else:
         linked = F.lit(False)
-    return df.groupBy("bucket").agg(
-        F.max(F.coalesce(linked, F.lit(False))).alias("linked")
-    )
+    done: Dict[int, bool] = {}
+    for b, ln in df.select("bucket", linked).collect():
+        done[b] = done.get(b, False) or bool(ln)
+    return done
 
 
-def filter_unfinished(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    n_buckets: int,
-    bucket_fn=None,
-) -> DataFrame:
-    """Drop conversations whose bucket already has a manifest row."""
-    bucketed = with_bucket(transcripts, n_buckets, bucket_fn=bucket_fn)
-    done = finished_buckets(spark, out_dir)
-    if done is None:
-        return bucketed
-    # the finished-bucket list is tiny (<= n_buckets rows): broadcast anti-join
-    return bucketed.join(
-        F.broadcast(done.select("bucket")), "bucket", "left_anti"
+def plan_buckets(
+    spark: SparkSession, bucketed: DataFrame, out_dir: str, link: bool
+) -> Tuple[List[int], List[int]]:
+    """(parse, relink) bucket lists for the input ``bucketed`` (carrying
+    a ``bucket`` column): ``parse`` has no manifest row yet; ``relink``
+    (only when ``link``) is finished but was written without linking.
+    Both come from the input's own buckets, so a bucket the input does
+    not carry is never marked linked by a run that could not link it."""
+    todo = sorted(r[0] for r in bucketed.select("bucket").distinct().collect())
+    linked = finished_buckets(spark, out_dir) or {}
+    parse = [b for b in todo if b not in linked]
+    relink = [b for b in todo if link and linked.get(b) is False]
+    return parse, relink
+
+
+def manifest_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """Manifest rows as a DataFrame: (bucket, convs, triples, errors,
+    turns, link_decisions, linked, ts). A null counter means the work
+    it counts did not run for that row — not zero."""
+    return spark.createDataFrame(
+        rows,
+        "bucket int, convs long, triples long, errors long, turns long, "
+        "link_decisions long, linked boolean, ts timestamp",
     )
 
 
 def write_bucketed(
-    triples: DataFrame,
-    errors: DataFrame,
+    spark: SparkSession,
     out_dir: str,
     n_buckets: int,
-    turns: Optional[DataFrame] = None,
+    parse: List[int],
+    relink: List[int],
+    turns: DataFrame,
+    triples: DataFrame,
+    errors: DataFrame,
     links: Optional[DataFrame] = None,
     bucket_fn=None,
 ) -> DataFrame:
-    """Write triples/errors (and links, when given) partitioned by bucket
-    + append manifest rows.
+    """Count, write and record the ``parse`` and ``relink`` buckets
+    (see plan_buckets); returns the manifest rows appended.
 
-    Returns the manifest DataFrame — the north-rule lineage counters per
-    bucket: conversations, turns parsed, triples emitted, parse errors,
-    link decisions.  ``turns`` is the transcript turn table (counted per
-    bucket); ``links`` is the (conv_id, entity_uri, mentions) linking
-    output, materialized under ``links/bucket=`` alongside the triples.
+    ``turns`` holds the transcript turns of both lists, ``triples`` and
+    ``errors`` the graph of the ``parse`` buckets, ``links`` the
+    (conv_id, entity_uri, mentions) linking output of both (None when
+    linking does not run). Each feeds the counters and a write, so the
+    caller persists the ones that are costly to recompute. The counters
+    come from ONE aggregate over their union, never from joins of
+    separate counts; ``convs`` counts the INPUT conversations, so a
+    bucket whose conversations all parse to zero triples still records
+    what it consumed. ``relink`` rows carry only link_decisions, which
+    is null when linking did not run.
 
-    Bucket data writes use DYNAMIC partition overwrite, not append: a
-    run only carries unfinished buckets, so replacing exactly the
-    partitions it writes makes a crash-replay idempotent — a run that
-    died AFTER appending bucket data but BEFORE its manifest row would
-    otherwise leave a duplicate copy under the bucket on resume. Dynamic
-    overwrite alone cannot clear a partition the replay writes ZERO rows
-    into, so when ``turns`` names the buckets this run owns, those
-    partition directories are deleted up front — a bucket whose
-    conversations all legitimately parse to zero triples then lands
-    clean instead of surfacing a crashed predecessor's stale rows
-    (round-6 ADVICE fix). The manifest itself stays append-only —
-    readers aggregate it per bucket.
-    """
-    t = with_bucket(triples, n_buckets, bucket_fn=bucket_fn)
-    e = with_bucket(errors, n_buckets, bucket_fn=bucket_fn)
-    if turns is not None:
-        import shutil
-
-        owned = [
-            r["bucket"]
-            for r in with_bucket(
-                turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn
-            ).select("bucket").distinct().collect()
-        ]
-        subs = ["triples", "errors"] + (["links"] if links is not None else [])
-        for sub in subs:
-            for bkt in owned:
-                shutil.rmtree(
-                    os.path.join(out_dir, sub, "bucket=%s" % bkt),
-                    ignore_errors=True,
-                )
-    t.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(os.path.join(out_dir, "triples"))
-    e.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(os.path.join(out_dir, "errors"))
-    man_t = t.groupBy("bucket").agg(
-        F.countDistinct("conv_id").alias("convs"),
-        F.count(F.lit(1)).alias("triples"),
+    Bucket data is written with DYNAMIC partition overwrite: a replay of
+    a run that died before its manifest append replaces the partitions
+    it owns instead of adding a second copy, and leaves other buckets
+    alone. Dynamic overwrite cannot clear a partition the replay writes
+    zero rows into, so the owned partitions are deleted first. The
+    manifest stays append-only; readers aggregate it per bucket."""
+    linked = links is not None
+    data = [("triples", "t", triples, parse), ("errors", "e", errors, parse)]
+    if linked:
+        data.append(("links", "l", links, parse + relink))
+    rows = turns.select("conv_id", F.lit("u").alias("rec"))
+    for _, tag, df, _ in data:
+        rows = rows.unionByName(df.select("conv_id", F.lit(tag).alias("rec")))
+    n = lambda tag: F.count(F.when(F.col("rec") == tag, 1))
+    # aggregate columns in manifest order, so a parse row is (*counts[b], ...)
+    counts = {
+        r["bucket"]: r
+        for r in with_bucket(rows, n_buckets, bucket_fn=bucket_fn)
+        .groupBy("bucket")
+        .agg(
+            F.countDistinct(F.when(F.col("rec") == "u", F.col("conv_id")))
+            .alias("convs"),
+            n("t").alias("triples"),
+            n("e").alias("errors"),
+            n("u").alias("turns"),
+            (n("l") if linked else F.lit(None).cast("long"))
+            .alias("link_decisions"),
+        )
+        .collect()
+    }
+    ts = datetime.datetime.now()
+    manifest = manifest_frame(
+        spark,
+        [(*counts[b], linked, ts) for b in parse]
+        + [
+            (b, None, None, None, None, counts[b]["link_decisions"], True, ts)
+            for b in relink
+        ],
     )
-    man_e = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("errors"))
-    manifest = man_t.join(man_e, "bucket", "full")
-    fill = ["convs", "triples", "errors"]
-    if turns is not None:
-        # convs is counted from the INPUT (conversations consumed), not
-        # from distinct conv_id in the triples output: a bucket whose
-        # conversations all parse to zero triples is still finished and
-        # must record how many it consumed
-        man_u = with_bucket(
-            turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn
-        ).groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.countDistinct("conv_id").alias("convs_in"),
-        )
-        manifest = (
-            manifest.join(man_u, "bucket", "full")
-            .withColumn("convs", F.coalesce("convs_in", F.lit(0)))
-            .drop("convs_in")
-        )
-        fill.append("turns")
-    else:
-        # null, NOT 0: "turn counting didn't run" must stay
-        # distinguishable from "bucket with zero turns"
-        manifest = manifest.withColumn("turns", F.lit(None).cast("long"))
-    if links is not None:
-        lk = with_bucket(links, n_buckets, bucket_fn=bucket_fn)
-        lk.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(os.path.join(out_dir, "links"))
-        man_l = lk.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("link_decisions")
-        )
-        manifest = manifest.join(man_l, "bucket", "full")
-        fill.append("link_decisions")
-    else:
-        # same null-vs-0 distinction for link decisions; `linked` below
-        # is the explicit per-row record of whether linking ran
-        manifest = manifest.withColumn(
-            "link_decisions", F.lit(None).cast("long")
-        )
-    manifest = (
-        manifest.na.fill(0, fill)
-        .withColumn("linked", F.lit(links is not None))
-        .withColumn("ts", F.current_timestamp())
-        # materialize once: the manifest is both written and handed back
-        # for inspection, and its lineage reaches through the parse stage —
-        # without this, every downstream collect() re-runs the parse
-        .localCheckpoint()
+    for sub, _, df, buckets in data:
+        if not buckets:
+            continue
+        fs, root = _hadoop_path(spark, _sub(out_dir, sub))
+        for b in buckets:
+            # False when the partition does not exist; other failures raise
+            fs.delete(root.suffix("/bucket=%d" % b), True)
+        with_bucket(df, n_buckets, bucket_fn=bucket_fn).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(_sub(out_dir, sub))
+    # one small file per append, not one per core
+    manifest.coalesce(1).write.mode("append").parquet(
+        _sub(out_dir, "manifest")
     )
-    manifest.write.mode("append").parquet(os.path.join(out_dir, "manifest"))
     return manifest
-
-
-def link_catchup(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    out_dir: str,
-    n_buckets: int,
-    entities: DataFrame,
-    link_fn,
-    bucket_fn=None,
-) -> Optional[DataFrame]:
-    """Linking-only pass for buckets finished by a prior run WITHOUT
-    entity linking (resuming an out_dir first written without entities
-    must not leave links/ silently incomplete). Restricts the input to
-    the finished-but-unlinked buckets, runs only ``link_fn`` (no parse,
-    no triple rewrite), appends links/bucket= and linked=true manifest
-    rows whose other counters stay null (that work did not run here).
-    Returns the appended manifest rows, or None when every finished
-    bucket is already linked."""
-    fin = finished_buckets(spark, out_dir)
-    if fin is None:
-        return None
-    unlinked = fin.filter(~F.col("linked")).select("bucket")
-    if not unlinked.take(1):
-        return None
-    todo = with_bucket(transcripts, n_buckets, bucket_fn=bucket_fn).join(
-        F.broadcast(unlinked), "bucket", "left_semi"
-    )
-    from pyspark.storagelevel import StorageLevel
-
-    # persisted: the linking stage (mention explode + broadcast join +
-    # scoring window) feeds BOTH the links/bucket= write and the
-    # manifest counters — without this it runs twice
-    lk = with_bucket(
-        link_fn(todo.drop("bucket"), entities), n_buckets, bucket_fn=bucket_fn
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        lk.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(os.path.join(out_dir, "links"))
-        null_long = F.lit(None).cast("long")
-        man = (
-            unlinked.join(
-                lk.groupBy("bucket").agg(
-                    F.count(F.lit(1)).alias("link_decisions")
-                ),
-                "bucket",
-                "left",
-            )
-            .select(
-                "bucket",
-                null_long.alias("convs"),
-                null_long.alias("triples"),
-                null_long.alias("errors"),
-                null_long.alias("turns"),
-                F.coalesce(F.col("link_decisions"), F.lit(0)).alias(
-                    "link_decisions"
-                ),
-                F.lit(True).alias("linked"),
-                F.current_timestamp().alias("ts"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        lk.unpersist()
-    man.write.mode("append").parquet(os.path.join(out_dir, "manifest"))
-    return man

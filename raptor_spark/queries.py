@@ -223,8 +223,8 @@ def q_resumable_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic half of the buckets WITHOUT entity linking (an
     interrupted job), run 2 resumes over the full input WITH the
     customer-entity dictionary — the resume skips the finished buckets,
-    completes the rest, and the linking catch-up pass back-fills link
-    decisions for the half finished without them. Returns the per-bucket
+    completes the rest, and in the same pass relinks the half finished
+    without linking. Returns the per-bucket
     counters (convs, turns parsed, triples emitted, parse errors, link
     decisions) merged across manifest generations exactly as a
     monitoring job reads them.
@@ -259,7 +259,7 @@ def q_resumable_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out}/manifest"
         )
         # per-bucket merge across generations: run-1 rows carry the parse
-        # counters (link_decisions null), the catch-up rows carry
+        # counters (link_decisions null), run 2's relink rows carry
         # link_decisions (other counters null) — max() over the bucket's
         # rows recovers the complete record
         return (

@@ -21,11 +21,30 @@ def transcripts(spark):
     ).cache()
 
 
-def test_resume_skips_finished_buckets(spark, transcripts, tmp_path_factory):
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs-%s" % uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# "file://" covers URI output dirs (tools/submit_job.py passes cluster
+# URIs): a path test through os.path would never see that manifest
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file-uri"])
+def test_resume_skips_finished_buckets(
+    spark, transcripts, tmp_path_factory, scheme
+):
     from raptor_spark.pipeline import run_resumable
     from raptor_spark.plans import checkpoint as ckpt
 
-    out = str(tmp_path_factory.mktemp("kg_out"))
+    out = scheme + str(tmp_path_factory.mktemp("kg_out"))
     n_buckets = 8
 
     m1 = run_resumable(spark, transcripts, out, n_buckets=n_buckets)
@@ -42,10 +61,16 @@ def test_resume_skips_finished_buckets(spark, transcripts, tmp_path_factory):
     }
     assert {r.bucket: r.triples for r in rows1} == per_bucket
 
-    # second run: every bucket finished -> no new work, no new triples
-    m2 = run_resumable(spark, transcripts, out, n_buckets=n_buckets)
+    # second run: every bucket finished -> no new work, no new triples,
+    # and the plan alone decides that: a handful of small jobs (bucket
+    # set of the input, manifest read), no parse or write job
+    m2, jobs = _count_jobs(
+        spark, lambda: run_resumable(spark, transcripts, out, n_buckets=n_buckets)
+    )
     assert m2.count() == 0
+    assert jobs <= 6, "no-op resume started %d jobs" % jobs
     assert spark.read.parquet(f"{out}/triples").count() == total_triples
+    assert spark.read.parquet(f"{out}/manifest").count() == len(rows1)
 
     # deterministic bucketing: recomputing buckets matches the manifest set
     bucketed = ckpt.with_bucket(transcripts, n_buckets)
@@ -84,7 +109,7 @@ def test_resume_adds_linking_to_finished_buckets(
 ):
     """Resuming an out_dir first written WITHOUT entities must not leave
     links/ silently incomplete: the second run links the already-finished
-    buckets via a linking-only catch-up pass, and the manifest records
+    buckets as relink buckets (linking only), and the manifest records
     whether linking ran (linked flag; link_decisions null when it
     didn't) rather than an ambiguous 0."""
     from raptor_spark.operators.link import customer_entities
@@ -107,13 +132,41 @@ def test_resume_adds_linking_to_finished_buckets(
     n_links = sum(r.link_decisions for r in rows2)
     assert n_links == transcripts.select("conv_id").distinct().count()
     assert spark.read.parquet(f"{out}/links").count() == n_links
-    fin = ckpt.finished_buckets(spark, out)
-    assert all(r.linked for r in fin.collect())
+    assert all(ckpt.finished_buckets(spark, out).values())
 
     # third run: everything finished AND linked -> nothing to do
     m3 = run_resumable(spark, transcripts, out, n_buckets=8, entities=ents)
     assert m3.count() == 0
     assert spark.read.parquet(f"{out}/links").count() == n_links
+
+
+def test_relink_covers_buckets_outside_a_partial_run(
+    spark, transcripts, tmp_path_factory
+):
+    """A linking run over PART of the input relinks only the buckets it
+    carries; the finished-but-unlinked buckets it does not carry stay
+    unlinked, so a later full run with entities links them."""
+    from raptor_spark.operators.link import customer_entities
+    from raptor_spark.pipeline import run_resumable
+    from raptor_spark.plans import checkpoint as ckpt
+
+    out = str(tmp_path_factory.mktemp("kg_relink_partial"))
+    ents = customer_entities(spark, "/root/testdata/sf0.001")
+    half = (
+        ckpt.with_bucket(transcripts, 8)
+        .filter(F.col("bucket") < 4)
+        .drop("bucket")
+    )
+    run_resumable(spark, transcripts, out, n_buckets=8)
+    rows2 = run_resumable(spark, half, out, n_buckets=8, entities=ents).collect()
+    assert rows2 and all(r.bucket < 4 and r.linked for r in rows2)
+    run_resumable(spark, transcripts, out, n_buckets=8, entities=ents)
+
+    links = spark.read.parquet(f"{out}/links")
+    n_convs = transcripts.select("conv_id").distinct().count()
+    assert links.count() == n_convs
+    assert links.select("conv_id").distinct().count() == n_convs
+    assert all(ckpt.finished_buckets(spark, out).values())
 
 
 def test_resume_processes_only_missing_buckets(spark, transcripts, tmp_path_factory):
@@ -169,25 +222,38 @@ def test_streaming_drain_matches_batch(spark, transcripts, tmp_path_factory):
 
 def test_bucket_replay_is_idempotent(spark, transcripts, tmp_path_factory):
     """A run that died AFTER writing bucket data but BEFORE its manifest
-    row re-executes those buckets on resume; the bucket writes use
+    append re-executes those buckets on resume; the bucket writes use
     dynamic partition overwrite, so the replay REPLACES the orphaned
-    copy instead of appending a duplicate next to it."""
-    from raptor_spark.pipeline import build_graph
+    copy instead of adding a duplicate next to it, and leaves the
+    buckets an earlier run finished alone."""
+    import shutil
+
+    from raptor_spark.pipeline import run_resumable
     from raptor_spark.plans import checkpoint as ckpt
 
-    out = str(tmp_path_factory.mktemp("replay"))
-    triples, errors = build_graph(transcripts)
-    ckpt.write_bucketed(triples, errors, out, n_buckets=4,
-                        turns=transcripts)
+    local = tmp_path_factory.mktemp("replay")
+    out = str(local)
+    half = (
+        ckpt.with_bucket(transcripts, 4)
+        .filter(F.col("bucket") < 2)
+        .drop("bucket")
+    )
+    rows = run_resumable(spark, half, out, n_buckets=4).collect()
+    shutil.copytree(local / "manifest", local / "manifest_half")
+    rows += run_resumable(spark, transcripts, out, n_buckets=4).collect()
     once = spark.read.parquet(out + "/triples").count()
-    # crash-replay: the same buckets written again (manifest row lost)
-    ckpt.write_bucketed(triples, errors, out, n_buckets=4,
-                        turns=transcripts)
+    assert once == sum(r.triples for r in rows) > 0
+    # crash-replay: the second run's bucket data is on disk, its
+    # manifest rows are lost
+    shutil.rmtree(local / "manifest")
+    (local / "manifest_half").rename(local / "manifest")
+    m3 = run_resumable(spark, transcripts, out, n_buckets=4)
+    assert {r.bucket for r in m3.collect()} == {2, 3}
     again = spark.read.parquet(out + "/triples").count()
-    assert once > 0 and again == once
+    assert again == once
     # the manifest log is append-only; readers aggregate per bucket
     man = spark.read.parquet(out + "/manifest")
-    assert man.count() == 2 * man.select("bucket").distinct().count()
+    assert sorted(r.bucket for r in man.collect()) == [0, 1, 2, 3]
 
 
 def test_empty_manifest_dir_reads_as_nothing_finished(spark, tmp_path):
@@ -204,29 +270,31 @@ def test_empty_manifest_dir_reads_as_nothing_finished(spark, tmp_path):
     assert ckpt.finished_buckets(spark, out) is None
 
 
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file-uri"])
 def test_zero_row_replay_clears_stale_bucket_data(
-    spark, transcripts, tmp_path_factory
+    spark, transcripts, tmp_path_factory, scheme
 ):
     """Dynamic partition overwrite alone cannot clear a partition the
     replay writes ZERO rows into: a crashed predecessor's rows would
     survive under a bucket whose conversations all legitimately parse
-    to zero triples. write_bucketed pre-deletes the partitions of the
-    buckets the run owns (from `turns`), so the zero-row replay lands
-    clean (round-6 ADVICE fix)."""
-    from raptor_spark.pipeline import build_graph
-    from raptor_spark.plans import checkpoint as ckpt
+    to zero triples. write_bucketed deletes the partitions of the
+    buckets the run owns first, so the zero-row replay lands clean —
+    through a URI out_dir too."""
+    import shutil
 
-    out = str(tmp_path_factory.mktemp("zero_replay"))
-    triples, errors = build_graph(transcripts)
-    ckpt.write_bucketed(triples, errors, out, n_buckets=4, turns=transcripts)
-    assert spark.read.parquet(out + "/triples").count() > 0
-    # crash-replay of the same buckets, now yielding zero triples
-    empty = triples.filter("1 = 0")
-    ckpt.write_bucketed(empty, errors.filter("1 = 0"), out, n_buckets=4,
-                        turns=transcripts)
-    import glob
-    import os
+    from raptor_spark.pipeline import run_resumable
 
-    assert not glob.glob(os.path.join(out, "triples", "bucket=*")), (
+    local = tmp_path_factory.mktemp("zero_replay")
+    out = scheme + str(local)
+    run_resumable(spark, transcripts, out, n_buckets=4)
+    assert list(local.glob("triples/bucket=*"))
+    # crash-replay of the same buckets (manifest lost), now with
+    # transcripts that parse to nothing
+    shutil.rmtree(local / "manifest")
+    m = run_resumable(
+        spark, transcripts.withColumn("text", F.lit("")), out, n_buckets=4
+    ).collect()
+    assert len(m) == 4 and sum(r.triples for r in m) == 0
+    assert not list(local.glob("triples/bucket=*")), (
         "stale bucket partitions survived a zero-row replay"
     )

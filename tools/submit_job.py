@@ -76,9 +76,10 @@ def main() -> None:
     )
     rows = manifest.collect()
     # counters are NULLABLE by design: link_decisions is null when the
-    # job runs without --link, and linking-catch-up rows carry null
-    # convs/triples/errors/turns (that work did not run in those rows) —
-    # sum them as 0, don't crash on None
+    # job runs without --link, and relink rows (buckets finished by an
+    # earlier run without --link) carry null convs/triples/errors/turns
+    # (that work did not run in those rows) — sum them as 0, don't crash
+    # on None
     print(
         json.dumps(
             {
