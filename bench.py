@@ -124,7 +124,7 @@ def run_bench(sf_dir: str, cpus: str, headline) -> dict:
     # bench-only input replication (scaling runs amortize fixed costs)
     replicate = int(os.environ.get("RAPTOR_SPARK_BENCH_REPLICATE", "1"))
 
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("raptor-spark-bench")
         # floor of 32: the sweet spot is input-size-driven (~32-64 at
@@ -138,21 +138,6 @@ def run_bench(sf_dir: str, cpus: str, headline) -> dict:
             str(max(int(cpus) * 2, 32) * max(replicate, 1)),
         )
         .config("spark.sql.adaptive.enabled", "true")
-    )
-    if replicate > 1:
-        # The mapInArrow parse stage costs orders of magnitude more CPU
-        # per shuffled byte than a relational stage, so AQE's default
-        # 64m advisory partition size coalesces it into a couple of
-        # ragged task waves per core (measured: 24s -> 20s at pinned
-        # local[8], x4 input, with 8m). Wave-quantization loss shrinks
-        # as 1/waves, so this matters most on the WIDE side of the
-        # scaling pair — exactly what the efficiency metric measures.
-        # On a real cluster the same knob applies per executor core.
-        builder = builder.config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m"
-        )
-    spark = (
-        builder
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         # throughput-bound string churn: ParallelGC beats G1 here and
@@ -756,17 +741,12 @@ def run_scaling(sf_dir: str) -> dict:
             "amortizes that constant inside the measured window itself —\n"
             "at x4 it is <4% of even the wide side's wall time — the\n"
             "same effect deployment input sizes have.\n\n"
-            "Task granularity: shuffle partitions scale with the\n"
-            "replicated input and the advisory AQE partition size is\n"
-            "lowered to 8m for replicated runs. The mapInArrow parse\n"
-            "stage costs orders of magnitude more CPU per shuffled byte\n"
-            "than a relational stage, so AQE's default 64m advisory\n"
-            "coalesces it to ~2.4 task waves on the 8-core side (ragged\n"
-            "tail, measured 24s -> 20s when fixed) while the 2-core side\n"
-            "ran ~9.5 waves (smooth) — an asymmetry that understated\n"
-            "scaling. Wave-quantization loss shrinks as 1/waves; on a\n"
-            "real cluster the same advisory-size tuning applies per\n"
-            "executor core.\n\n"
+            "Task granularity: the reassembly exchange that feeds the\n"
+            "mapInArrow parse stage has an explicit partition count,\n"
+            "whole waves of the session's cores sized by the input's\n"
+            "planned bytes (operators/parse.whole_waves), so AQE's\n"
+            "byte-sized coalescing cannot leave a ragged task wave on\n"
+            "either side of the pair.\n\n"
             "Variability addendum: whole sessions swing with neighbor\n"
             "load — the engine's scaling behavior is the UPPER envelope\n"
             "of the history (quiet-host sessions), not the minimum.\n"

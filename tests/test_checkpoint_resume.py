@@ -78,6 +78,65 @@ def test_resume_skips_finished_buckets(
     assert {r.bucket for r in rows1} == expect_buckets
 
 
+def test_bucket_files_at_most_one_per_core(spark, transcripts, tmp_path):
+    """Each parse task writes one file per bucket it holds, so the files
+    per bucket follow the parse stage's partition count: whole waves of
+    the session's cores, not the shuffle partition setting (the
+    persisted parse output keeps its partitions; at sf0.02 with 16
+    buckets and 16 shuffle partitions that was 256 files)."""
+    from raptor_spark.pipeline import run_resumable
+
+    out = tmp_path / "kg_files"
+    assert run_resumable(spark, transcripts, str(out), n_buckets=8).collect()
+    buckets = sorted((out / "triples").glob("bucket=*"))
+    assert buckets
+    cores = spark.sparkContext.defaultParallelism
+    files = {b.name: len(list(b.glob("*.parquet"))) for b in buckets}
+    assert max(files.values()) <= cores, files
+
+
+def test_bucket_files_bounded_with_more_splits_than_cores(spark, tmp_path):
+    """The parse stage's partition count follows the input's planned
+    size, not its scan splits: a small input read in many splits still
+    leaves at most one file per core in each bucket."""
+    from raptor_spark.pipeline import run_resumable
+    from raptor_spark.sources.transcripts import materialize_transcripts
+
+    path = materialize_transcripts(spark, "/root/testdata/sf0.001")
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    try:
+        tx = spark.read.parquet(path)
+        assert tx.rdd.getNumPartitions() > 4 * cores
+        out = tmp_path / "kg_splits"
+        assert run_resumable(spark, tx, str(out), n_buckets=8).collect()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    files = {
+        b.name: len(list(b.glob("*.parquet")))
+        for b in (out / "triples").glob("bucket=*")
+    }
+    assert files and max(files.values()) <= cores, files
+
+
+def test_reassemble_plans_without_running_jobs(spark):
+    """Sizing the reassembly exchange runs nothing, even over a cached
+    input whose cached plan has exchanges of its own."""
+    from raptor_spark.operators.parse import parse_documents
+    from raptor_spark.operators.reassemble import reassemble
+    from raptor_spark.sources.transcripts import tpch_transcripts
+
+    cached = tpch_transcripts(spark, "/root/testdata/sf0.001", max_orders=50)
+    cached = cached.cache()
+    try:
+        _, jobs = _count_jobs(
+            spark, lambda: parse_documents(reassemble(cached.where("turn_idx >= 0")))
+        )
+    finally:
+        cached.unpersist()
+    assert jobs == 0
+
+
 def test_lineage_counters_turns_and_links(spark, transcripts, tmp_path_factory):
     from raptor_spark.operators.link import customer_entities
     from raptor_spark.pipeline import run_resumable

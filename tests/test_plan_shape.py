@@ -290,3 +290,38 @@ def test_python_stage_queries_rebalanced_and_map_only(spark):  # noqa: F811
         # parse_documents-backed queries run mapInArrow; the scorer
         # and media stages are pandas-frame-shaped and stay mapInPandas
         assert ("MapInPandas" in plan) or ("MapInArrow" in plan), (name, plan)
+
+
+def test_parse_stage_runs_whole_waves(spark):  # noqa: F811
+    """The reassembly exchange feeds the CPU-bound parse stage, so its
+    partition count is explicit and a multiple of the session's cores:
+    AQE's byte-sized coalescing must not pack that stage into fewer
+    tasks than cores, or one task more than a whole wave (measured at
+    sf0.02 on 4 cores: 5 tasks, two waves, 1.98 s; 4 tasks, 1.38 s)."""
+    import uuid
+
+    from raptor_spark.pipeline import build_graph
+    from raptor_spark.sources.transcripts import materialize_transcripts
+
+    sc = spark.sparkContext
+    path = materialize_transcripts(spark, "/root/testdata/sf0.001")
+    triples, _errors = build_graph(spark.read.parquet(path))
+    group = "waves-%s" % uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        assert triples.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the last stage is the result stage: reassembly read -> parse
+    parse_tasks = tracker.getStageInfo(max(stages)).numTasks
+    cores = sc.defaultParallelism
+    assert parse_tasks and parse_tasks % cores == 0, (parse_tasks, cores)
+    final = triples._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    assert "coalesced" not in final, final
