@@ -17,7 +17,7 @@ Conventions:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from raptor_spark.operators.parse import (
     rebalance_for_parse as _rebalance,  # CPU-bound-stage split fix
@@ -1813,43 +1813,43 @@ def q_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cascade_pairs(spark, sf_dir)
 
 
-#: round cap for the connected-components loop. With pointer doubling the
-#: round count is O(log2 diameter), so 24 rounds cover components of
-#: diameter ~2^24 — far beyond any real near-dup graph; hitting the cap
-#: while labels still change is therefore a hard signal, not a tail case.
+#: round cap for the connected-components loop. With root hooking the
+#: round count grows with log2 of the component size whatever the order
+#: of the ids: 8 rounds for 200-node paths and 10-11 for 2000-node paths
+#: with shuffled ids (tests/test_clusters.py pins ceil(log2 n) + 2). 24
+#: leaves a wide margin over that growth, so hitting the cap while labels
+#: still change is a hard signal, not a tail case.
 _CC_MAX_ROUNDS = 24
 
-#: diagnostics of the last q_dedup_clusters run (bench surfaces these):
-#: rounds executed and whether the labeling converged before the cap.
-CLUSTER_STATS = {"rounds": 0, "converged": False, "build_sec": 0.0}
 
+def _components(pairs: DataFrame):
+    """Connected components of the undirected graph whose edges are the
+    (doc_a, doc_b) rows of ``pairs``: returns (labels(node, lbl), rounds),
+    lbl the least node id of node's component, one row per node that has
+    an edge.
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate clustering: connected components over the cascade's
-    verified pairs, turning pairwise matches into keep/drop decisions
-    (keep doc_id == cluster_rep).
+    Each round reads (u, lu, v, lv) rows, one per directed edge with the
+    current label of each end, and takes ONE groupBy(node).min over three
+    proposals: (u, lv) propagates a neighbour's label, (lu, lv) hooks the
+    node u points at — the root of u's label tree — to the least label
+    any of its members has seen, and (u, lu) keeps every node. Then one
+    pointer jump, lbl <- least(lbl, lbl(lbl)): an inner self-join, since
+    every label is a node of the same component and has its own row.
+    Hooking roots as well as nodes is what makes the round count
+    logarithmic: plain min-label propagation with pointer jumping needs
+    rounds in the order of the diameter when ids are not sorted along a
+    path.
 
-    Min-label propagation with pointer doubling: each round takes the min
-    of the neighbors' labels, then jumps to the label's own label
-    (lbl <- lbl(lbl)), which halves chain lengths — O(log diameter)
-    rounds even for path-shaped components (sliding boilerplate
-    variants), vs O(diameter) for plain propagation. Each round is
-    equi-joins on the component graph only; the driver sees nothing but
-    the per-round change count. Per-round ``localCheckpoint`` both
-    truncates the lineage (no 2^rounds plan growth) and materializes the
-    labels, so the RETURNED frame reads checkpointed blocks — downstream
-    actions never re-run the LSH cascade, and no caches are leaked.
-
-    Contract note: unlike the other queries() entries, CONSTRUCTING this
-    frame runs Spark jobs eagerly — iterative convergence needs per-round
-    actions; there is no lazy formulation of an until-fixpoint loop. If
-    the round cap is ever hit while labels still change (see
-    _CC_MAX_ROUNDS), the labeling would be incomplete, so it raises
-    instead of silently returning wrong cluster reps."""
-    import time as _time
-
-    _t0 = _time.time()
-    pairs = _cascade_pairs(spark, sf_dir)
+    A label never rises (the node's own label is one of its proposals,
+    and the jump takes a least), so the labels are unchanged exactly when
+    their sum is: the sum is an Observation on the localCheckpoint that
+    materializes each round, and no second job counts changes. Unchanged
+    labels are the fixpoint, constant on each component and at most
+    every member's id, hence the component minimum. Round 1 reads the
+    checkpointed edges with every label equal to its node; per-round
+    ``localCheckpoint`` truncates the lineage, so the plan never grows
+    with the rounds. Raises if labels still change after _CC_MAX_ROUNDS
+    rounds: the labeling would be incomplete."""
     # both edge directions from ONE pass over the pairs (explode of a
     # 2-struct array) — the union-of-two-selects form put the whole
     # cascade subtree in the plan twice
@@ -1869,66 +1869,61 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("_e.u", "_e.v")
         .localCheckpoint()
     )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
+    rows = edges.select(
+        "u", F.col("u").alias("lu"), "v", F.col("v").alias("lv")
     )
-    converged = False
-    rounds = 0
-    for _ in range(_CC_MAX_ROUNDS):
-        rounds += 1
-        nbr_min = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("lbl").alias("nlbl"))
-            .withColumnRenamed("u", "node")
+    # (node, proposed label): neighbour propagation, root hooking, self
+    props = F.array(
+        *(
+            F.struct(F.col(n).alias("node"), F.col(lb).alias("lbl"))
+            for n, lb in (("u", "lv"), ("lu", "lv"), ("u", "lu"))
         )
-        prop = labels.join(nbr_min, "node", "left").select(
-            "node",
-            # the round's INPUT label rides along so the changed-count
-            # below is a filter over the checkpointed frame instead of a
-            # join back against the previous checkpoint (one fewer
-            # shuffle + job per round)
-            F.col("lbl").alias("_old"),
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-            ).alias("lbl"),
+    )
+    prev = None
+    for rounds in range(1, _CC_MAX_ROUNDS + 1):
+        best = (
+            rows.select(F.explode(props).alias("_p"))
+            .select("_p.node", "_p.lbl")
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
         )
-        # pointer doubling: lbl <- min(lbl, lbl(lbl)); label values are
-        # always node ids of the same component, so this never crosses
-        # components and the fixpoint (component-min labeling) is the same
-        hop = prop.select(
-            F.col("node").alias("pnode"), F.col("lbl").alias("plbl")
+        jump = best.toDF("_at", "_up")
+        obs = Observation()
+        labels = (
+            best.join(jump, F.col("lbl") == F.col("_at"))
+            .select("node", F.least("lbl", "_up").alias("lbl"))
+            .observe(obs, F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"))
+            .localCheckpoint()
         )
-        stepped = prop.join(hop, prop["lbl"] == hop["pnode"], "left").select(
-            "node",
-            "_old",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("plbl"), F.col("lbl"))
-            ).alias("lbl"),
+        total = obs.get["s"]
+        # an empty graph sums to NULL in round 1 and stops there
+        if total == prev:
+            return labels, rounds
+        prev = total
+        rows = edges.join(labels.toDF("u", "lu"), "u").join(
+            labels.toDF("v", "lv"), "v"
         )
-        new_labels = stepped.select(
-            "node", "lbl", (F.col("lbl") != F.col("_old")).alias("_chg")
-        ).localCheckpoint()
-        changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-    CLUSTER_STATS["rounds"] = rounds
-    CLUSTER_STATS["converged"] = converged
-    # eager-construction cost (cascade edges + convergence rounds); the
-    # returned frame reads checkpointed labels, so bench splits this
-    # build time from the read time
-    CLUSTER_STATS["build_sec"] = round(_time.time() - _t0, 3)
-    if not converged:
-        raise RuntimeError(
-            "dedup_clusters: labels still changing after %d rounds — "
-            "component structure is pathological; raise _CC_MAX_ROUNDS"
-            % _CC_MAX_ROUNDS
-        )
+    raise RuntimeError(
+        "dedup_clusters: labels still changing after %d rounds — "
+        "component structure is pathological; raise _CC_MAX_ROUNDS"
+        % _CC_MAX_ROUNDS
+    )
+
+
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate clustering: connected components (_components) over
+    the cascade's verified pairs, turning pairwise matches into keep/drop
+    decisions (keep doc_id == cluster_rep). The returned frame reads the
+    checkpointed labels, so downstream actions never re-run the LSH
+    cascade, and no caches are leaked.
+
+    Contract note: unlike the other queries() entries, CONSTRUCTING this
+    frame runs Spark jobs eagerly — iterative convergence needs per-round
+    actions; there is no lazy formulation of an until-fixpoint loop. If
+    the round cap is ever hit while labels still change (see
+    _CC_MAX_ROUNDS), the labeling would be incomplete, so it raises
+    instead of silently returning wrong cluster reps."""
+    labels, _ = _components(_cascade_pairs(spark, sf_dir))
     sizes = labels.groupBy("lbl").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )
@@ -2420,8 +2415,9 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup drop (only cluster representatives survive
     dedup_clusters), then a deterministic md5-keyed 18/1/1
     train/val/test split. Every stage is a column expression or an
-    already-bucketed operator; the only driver-side work is the
-    label-propagation round counter inside dedup_clusters."""
+    already-bucketed operator; the only driver-side work is
+    dedup_clusters' convergence test, one label sum per round read from
+    an Observation on that round's checkpoint."""
     docs = _rebalance(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
@@ -2843,12 +2839,6 @@ _IVF_PROBES = 4
 _ANN_K = 10
 _IVF_ITERS = 2
 
-#: diagnostics of the last q_ann_topk run (bench surfaces these): the
-#: eager codebook-training wall time vs the lazy search plan, plus the
-#: derived cell count — the honest decomposition of "IVF got slower at
-#: small N": the one-time build (train + N x cells assignment) dominates
-#: until the corpus/query volume amortizes it.
-ANN_STATS = {"train_sec": 0.0, "cells": 0, "sample": 0}
 _IVF_MIN_CELLS = 16
 _IVF_SAMPLE_MULT = 32
 
@@ -2984,9 +2974,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_plan_shape.py::test_ann_assign_no_exchange); per-query search
     is ~probes * N / cells = O(sqrt N) behind a broadcast probe join.
     """
-    import time as _time
-
-    _t0 = _time.time()
     emb = _embeddings(spark, sf_dir)
     n = emb.count()
     cells, denom = _ivf_params(n)
@@ -3051,9 +3038,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent_rows = [
             (c, newc.get(c, ce)) for c, ce in cent_rows
         ]
-    ANN_STATS["train_sec"] = round(_time.time() - _t0, 3)
-    ANN_STATS["cells"] = cells
-    ANN_STATS["sample"] = n // denom  # expected hash-sample size
     # full-corpus assignment: broadcast the codebook-as-a-column and fold
     # per row — map-only, the plan has NO exchange between the parquet
     # scan and the assignment (gated by test_plan_shape.py)
